@@ -118,6 +118,13 @@ object Snapshots {
                             cdf: Seq[String] = Seq.empty,
                             cdfComplete: Boolean = false)
 
+  /** `man`'s recorded schema, or THE refusal for a legacy (v1)
+    * manifest, which records none: `where` names the version,
+    * `action` says what the caller can do instead. */
+  def recordedSchema(man: Manifest, where: String, action: String): StructType =
+    man.schema.getOrElse(throw new IllegalArgumentException(
+      s"$where is a legacy (v1) manifest with no recorded schema — $action"))
+
   private def hconf(): Configuration =
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
@@ -669,9 +676,8 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot set a property on an empty table $dir — commit first")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(throw new IllegalArgumentException(
-      s"version ${v - 1} is a legacy v1 manifest with no recorded schema — " +
-        "commit once to upgrade before setting properties"))
+    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
+      "commit once to upgrade before setting properties")
     val map = colMapOf(prev)
     val props = changes.foldLeft(prev.props) {
       case (acc, (k, Some(x))) => acc + (k -> x)
@@ -705,7 +711,8 @@ object Snapshots {
     * by the stable column mapping (physical names never change, so a
     * mid-range rename pairs exactly; columns added later read NULL in
     * earlier versions' changes), each row stamped [[ChangeTypeCol]]
-    * and [[CommitVersionCol]]:
+    * and [[CommitVersionCol]]. Each version's [[VersionChange]] (from
+    * [[classify]], shared with the streaming face) delivers:
     *
     *  - appends / the table-creating commit → their added files as
     *    'insert';
@@ -716,8 +723,9 @@ object Snapshots {
     *  - pure file removals (partition delete, TRUNCATE) → the removed
     *    files' surviving rows as 'delete';
     *  - compact / OPTIMIZE → nothing (row-neutral by contract);
-    *  - anything else (unrecorded COW rewrites, restores) refuses
-    *    loudly naming [[setChangeFeed]].
+    *  - unrecorded COW rewrites and resurrecting restores refuse
+    *    loudly naming [[setChangeFeed]]; an unlabeled version whose
+    *    predecessor was reclaimed refuses naming the reclaimed history.
     *
     * Vacuumed-away versions inside the range refuse with the manifest
     * reader's version-does-not-exist diagnostic — exact history
@@ -733,8 +741,8 @@ object Snapshots {
     require(startingVersion >= 0 && startingVersion <= to && to <= cur,
       s"change-feed range [$startingVersion, $to] outside committed 0..$cur")
     val toMan = manifestAt(dir, to, orDemoted = true)
-    val toSchema = toMan.schema.getOrElse(throw new IllegalArgumentException(
-      s"version $to of $dir is a legacy manifest with no recorded schema"))
+    val toSchema = recordedSchema(toMan, s"version $to of $dir",
+      "commit once to upgrade before reading the change feed")
     val toMap = colMapOf(toMan)
     Seq(ChangeTypeCol, CommitVersionCol).foreach { reserved =>
       require(!toSchema.fieldNames.exists(_.equalsIgnoreCase(reserved)),
@@ -752,97 +760,48 @@ object Snapshots {
       } ++ Seq(
         changeType.map(lit(_)).getOrElse(quoted(ChangeTypeCol)).as(ChangeTypeCol),
         lit(v).as(CommitVersionCol)): _*)
-    def refuse(v: Long): Nothing = throw new IllegalStateException(
-      s"version $v of $dir rewrote rows without recorded change data — " +
-        "enable Snapshots.setChangeFeed BEFORE such commits to read them " +
-        "as a change feed")
     val frames = Seq.newBuilder[DataFrame]
     var prev: Option[Manifest] =
       if (startingVersion == 0) None
       else if (versionExists(dir, startingVersion - 1, orDemoted = true))
         Some(manifestAt(dir, startingVersion - 1, orDemoted = true))
-      else None // reclaimed past the chain: certify by op label below
+      else None // reclaimed past the chain: classify certifies by op label
     (startingVersion to to).foreach { v =>
       val man = manifestAt(dir, v, orDemoted = true)
-      def ownAdds: Seq[String] = man.files.filter(rel =>
-        graft.sources.SnapshotStreamSource.fileVersion(rel) == v)
       def insertsOf(rels: Seq[String]): Unit =
         if (rels.nonEmpty)
-          frames += project(readPhysical(spark, root, man, rels),
-            Some("insert"), v)
-      def cdfOf(): Unit = if (man.cdf.nonEmpty) {
-        val physSchema = StructType(
-          man.schema.getOrElse(toSchema).fields.map(fd =>
-            fd.copy(name = physicalOf(colMapOf(man), fd.name))) :+
-            StructField(ChangeTypeCol, StringType, nullable = true))
-        frames += project(readAs(spark, root, man.cdf, Some(physSchema)),
-          None, v)
-      }
-      (v, prev) match {
-        case (0L, _) => insertsOf(ownAdds) // table creation = inserts
-        case (_, Some(p)) =>
-          val curFiles = man.files.toSet
-          if (!p.files.forall(curFiles.contains)) {
-            // the version removed files: the r18 delivery ladder
-            if (man.op.contains("compact")) ()
-            else if (man.cdfComplete) cdfOf()
-            else {
-              val adds = ownAdds
-              val survivorsDvEqual = p.files.filter(curFiles).forall(rel =>
-                p.dvs.get(rel) == man.dvs.get(rel))
-              // PURE removal requires cur ⊆ prev too: a RESTORE that
-              // resurrects an older version's files would otherwise
-              // classify here and deliver only the removals, silently
-              // omitting the reappeared rows (review r18)
-              val noResurrection = {
-                val pf = p.files.toSet
-                man.files.forall(pf.contains)
-              }
-              if (adds.isEmpty && survivorsDvEqual && noResurrection) {
-                val removed = p.files.filterNot(curFiles)
-                if (removed.nonEmpty)
-                  frames += project(
-                    readPhysical(spark, root, p.copy(files = removed), removed),
-                    Some("delete"), v)
-              } else refuse(v)
-            }
-          } else {
-            // files neither carried from the predecessor nor added by
-            // this version are RESURRECTED (a superset restore) —
-            // reappearance is not expressible as CDC (review r18: the
-            // subset guard alone missed this shape)
-            val pSet = p.files.toSet
-            if (man.files.exists(rel =>
-                !pSet(rel) && graft.sources.SnapshotStreamSource.fileVersion(rel) != v))
-              refuse(v)
-            // carried set intact: row-level DV drift + any appends
-            val drifted = p.files.filter(rel => p.dvs.get(rel) != man.dvs.get(rel))
-            if (drifted.nonEmpty) {
-              val monotone = drifted.forall { rel =>
-                p.dvs.getOrElse(rel, Vector.empty).toSet
-                  .subsetOf(man.dvs.getOrElse(rel, Vector.empty).toSet)
-              }
-              if (!monotone) refuse(v) // restore resurrecting rows
-              drifted.foreach { rel =>
-                val before = p.dvs.getOrElse(rel, Vector.empty).toSet
-                val added = man.dvs.getOrElse(rel, Vector.empty).filterNot(before)
-                if (added.nonEmpty)
-                  frames += project(
-                    readPhysical(spark, root, man.copy(dvs = Map.empty),
-                      Seq(rel), keepMeta = true)
-                      .filter(col(DvPosCol).isin(added: _*))
-                      .drop(DvPosCol, DvFileCol),
-                    Some("delete"), v)
-              }
-            }
-            insertsOf(ownAdds)
+          frames += project(readPhysical(spark, root, man, rels), Some("insert"), v)
+      classify(v, prev, man) match {
+        case VersionChange.Append(adds) => insertsOf(adds)
+        case VersionChange.DvDelete(added, adds) =>
+          added.foreach { case (rel, positions) =>
+            frames += project(
+              readPhysical(spark, root, man.copy(dvs = Map.empty), Seq(rel),
+                keepMeta = true)
+                .filter(col(DvPosCol).isin(positions: _*))
+                .drop(DvPosCol, DvFileCol),
+              Some("delete"), v)
           }
-        case (_, None) => man.op match { // predecessor gone: by label
-          case Some(o) if AppendOpsBatch.contains(o) => insertsOf(ownAdds)
-          case Some("compact") => ()
-          case Some(_) if man.cdfComplete => cdfOf()
-          case _ => refuse(v)
+          insertsOf(adds)
+        case VersionChange.Recorded(cdf, _) => if (cdf.nonEmpty) {
+          val physSchema = StructType(
+            man.schema.getOrElse(toSchema).fields.map(fd =>
+              fd.copy(name = physicalOf(colMapOf(man), fd.name))) :+
+              StructField(ChangeTypeCol, StringType, nullable = true))
+          frames += project(readAs(spark, root, cdf, Some(physSchema)), None, v)
         }
+        case VersionChange.Neutral(_) => ()
+        case VersionChange.Removal(before) =>
+          frames += project(readPhysical(spark, root, before, before.files),
+            Some("delete"), v)
+        case VersionChange.Rewrite => throw new IllegalStateException(
+          s"version $v of $dir rewrote rows without recorded change data — " +
+            "enable Snapshots.setChangeFeed BEFORE such commits to read them " +
+            "as a change feed")
+        case VersionChange.Unverifiable => throw new IllegalStateException(
+          s"history before version $v of $dir was reclaimed past a checkpoint " +
+            "manifest and the version carries no op label, so its changes " +
+            "cannot be reconstructed — read the feed from a later version")
       }
       prev = Some(man)
     }
@@ -862,14 +821,124 @@ object Snapshots {
     }
   }
 
-  /** Commits provably append-only by their own label — the batch
-    * change feed's predecessor-gone certification (mirrors the
-    * streaming source's AppendOps). */
-  // KEEP IN SYNC with SnapshotStreamSource.AppendOps (review r18 —
-  // a divergence makes the two faces certify predecessor-less
-  // versions differently)
-  private val AppendOpsBatch = Set("append", "stream-append", "rename",
+  /** What one version changed, relative to its predecessor — the ONE
+    * classification both change-feed faces fold ([[changeFeed]] and
+    * the streaming source's `readChangeFeed`), so a stream's output
+    * over a range equals the batch feed over the same range by
+    * construction (the Structured Streaming prefix rule). */
+  sealed trait VersionChange
+  object VersionChange {
+    /** Only new files (`adds`, the version's own): its rows are the
+      * version's inserts. Also the table-creating commit. */
+    final case class Append(adds: Seq[String]) extends VersionChange
+    /** Carried files' deletion vectors only GREW: `added` = the newly
+      * doomed positions per file (its 'delete' rows, read by position
+      * from the byte-identical file), plus the version's own adds. */
+    final case class DvDelete(added: Map[String, Vector[Long]],
+                              adds: Seq[String]) extends VersionChange
+    /** A DML commit that recorded its change data: `cdf` = its `#cdf`
+      * change files; `rewritten` = its own added data files, which are
+      * rewrites and must not read as inserts. */
+    final case class Recorded(cdf: Seq[String], rewritten: Seq[String])
+        extends VersionChange
+    /** Compact / OPTIMIZE — row-neutral by contract: no changes, and
+      * its `rewritten` files must not read as inserts. */
+    final case class Neutral(rewritten: Seq[String]) extends VersionChange
+    /** Pure file removal (partition delete, TRUNCATE, remove-only
+      * restore): `before` is the predecessor narrowed to the removed
+      * files and their PRIOR deletion vectors — their surviving rows
+      * are exactly the version's deletes. */
+    final case class Removal(before: Manifest) extends VersionChange
+    /** Rewrote rows in a way the manifests cannot express as changes:
+      * a COW rewrite without change data, a restore that resurrects
+      * files (superset) or rows (a deletion vector shrank), or files
+      * neither carried nor added. */
+    case object Rewrite extends VersionChange
+    /** The predecessor is gone and no op label certifies the version. */
+    case object Unverifiable extends VersionChange
+  }
+
+  /** Classify version `v` from its manifest `cur` and its
+    * predecessor's (`prev` = None when v-1 is gone — history reclaimed
+    * past a checkpoint manifest — or v is 0). Pure: reads no files. */
+  private[graft] def classify(v: Long, prev: Option[Manifest],
+                              cur: Manifest): VersionChange = {
+    import VersionChange._
+    lazy val adds = cur.files.filter(fileVersion(_) == v)
+    val curSet = cur.files.toSet
+    /** The version removed files (or, predecessor gone, carries a
+      * change label): compact and recorded DML deliver on their own;
+      * otherwise only a PURE removal is recoverable — it needs
+      * cur ⊆ prev, no own adds and unchanged survivor DVs, or a
+      * RESTORE that resurrects older files would deliver only the
+      * removals (review r18). */
+    def rewrite(p: Option[Manifest]): VersionChange =
+      if (cur.op.contains("compact")) Neutral(adds)
+      else if (cur.cdfComplete) Recorded(cur.cdf, adds)
+      else p match {
+        case Some(pm) if adds.isEmpty && cur.files.forall(pm.files.toSet) &&
+            pm.files.filter(curSet).forall(rel => pm.dvs.get(rel) == cur.dvs.get(rel)) =>
+          val removed = pm.files.filterNot(curSet)
+          Removal(pm.copy(files = removed,
+            dvs = pm.dvs.filter { case (rel, _) => !curSet(rel) }))
+        case _ => Rewrite
+      }
+    (v, prev) match {
+      case (0L, _) => Append(adds) // table creation cannot remove files
+      case (_, Some(p)) if !p.files.forall(curSet) => rewrite(prev)
+      case (_, Some(p)) =>
+        // files neither carried nor added by this version are
+        // RESURRECTED (a superset restore) — reappearance is not
+        // expressible as CDC (review r18: the subset guard alone
+        // missed this shape)
+        val pSet = p.files.toSet
+        if (cur.files.exists(rel => !pSet(rel) && fileVersion(rel) != v)) Rewrite
+        else {
+          // carried set intact: any DV drift is row-level; only a
+          // MONOTONE drift (positions added) is a delete — a shrink is
+          // a restore resurrecting rows
+          val drifted = p.files.filter(rel => p.dvs.get(rel) != cur.dvs.get(rel))
+          def dv(m: Manifest, rel: String) = m.dvs.getOrElse(rel, Vector.empty)
+          if (drifted.isEmpty) Append(adds)
+          else if (!drifted.forall(rel => dv(p, rel).toSet.subsetOf(dv(cur, rel).toSet)))
+            Rewrite
+          else DvDelete(drifted.map { rel =>
+            val before = dv(p, rel).toSet
+            rel -> dv(cur, rel).filterNot(before)
+          }.filter(_._2.nonEmpty).toMap, adds)
+        }
+      case (_, None) => cur.op match { // predecessor gone: certify by label
+        case Some(o) if AppendOps(o) => Append(adds)
+        case Some(o) if ChangeOps(o) => rewrite(None)
+        case _ => Unverifiable // unlabeled (pre-r15)
+      }
+    }
+  }
+
+  /** Op labels of commits provably incapable of removing files —
+    * certifiable from the label alone when the predecessor manifest is
+    * gone (vacuum reclaimed history up to a CHECKPOINT manifest, whose
+    * predecessor is no delta base, so it was deleted, not demoted). */
+  private val AppendOps = Set("append", "stream-append", "rename",
     "alter", "set-property")
+  /** Op labels of the change family, classified as rewrites when the
+    * predecessor is gone. */
+  private val ChangeOps = Set("commit", "compact", "delete", "update",
+    "merge", "restore")
+
+  /** The version whose commit wrote this file — every writer puts a
+    * commit's new files under `data/v<NNNNNN>/`. A file outside that
+    * layout cannot be attributed to a version and fails loudly rather
+    * than being silently re-delivered forever. */
+  private[graft] def fileVersion(rel: String): Long = {
+    val parts = rel.split("/")
+    if (parts.length >= 3 && parts(0) == "data" && parts(1).length > 1 &&
+        parts(1).startsWith("v") && parts(1).drop(1).forall(_.isDigit))
+      parts(1).drop(1).toLong
+    else throw new IllegalStateException(
+      s"data file '$rel' is outside the data/v<NNNNNN>/ layout — " +
+        "cannot attribute it to a committing version for streaming")
+  }
 
   /** Write a DML commit's change rows (table columns + a
     * [[ChangeTypeCol]] string) under `_change_data/v<NNNNNN>/` with
@@ -1904,9 +1973,8 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot rename a column of an empty table $dir")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(throw new IllegalArgumentException(
-      s"version ${v - 1} is a legacy v1 manifest with no recorded schema — " +
-        "commit once to upgrade before renaming"))
+    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
+      "commit once to upgrade before renaming")
     val idx = schema.fields.indexWhere(fd => sameCol(fd.name, from))
     require(idx >= 0, s"no column '$from' in $dir (have: ${schema.fieldNames.mkString(", ")})")
     require(!schema.fields.zipWithIndex.exists { case (fd, i) =>
@@ -1940,9 +2008,8 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot $op on an empty table $dir")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(throw new IllegalArgumentException(
-      s"version ${v - 1} is a legacy v1 manifest with no recorded schema — " +
-        s"commit once to upgrade before $op"))
+    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
+      s"commit once to upgrade before $op")
     val (newSchema, map) = change(schema, prev)
     if (deltaOk(prev))
       publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
@@ -3163,9 +3230,8 @@ object Snapshots {
     require(v > 0, s"no committed version in $dir")
     val target = readManifest(f, root, version)
     val prev = readManifest(f, root, v - 1)
-    val schema = target.schema.getOrElse(throw new IllegalArgumentException(
-      s"version $version is a legacy v1 manifest with no recorded schema — " +
-        "restore needs a schema-bearing target"))
+    val schema = recordedSchema(target, s"version $version of $dir",
+      "restore needs a schema-bearing target")
     val targetMap = colMapOf(target)
     // retire every physical the CURRENT head uses that the restored
     // mapping does not — the lifetime-uniqueness invariant survives

@@ -108,20 +108,6 @@ object SnapshotStreamSource {
       case other => throw new IllegalArgumentException(
         s"$name must be true or false, got '$other'")
     }
-
-  /** The version whose commit wrote this file — every writer in
-    * [[Snapshots]] puts a commit's new files under `data/v<NNNNNN>/`.
-    * A file outside that layout cannot be attributed to a version and
-    * fails loudly rather than being silently re-delivered forever. */
-  private[graft] def fileVersion(rel: String): Long = {
-    val parts = rel.split("/")
-    if (parts.length >= 3 && parts(0) == "data" && parts(1).length > 1 &&
-        parts(1).startsWith("v") && parts(1).drop(1).forall(_.isDigit))
-      parts(1).drop(1).toLong
-    else throw new IllegalStateException(
-      s"data file '$rel' is outside the data/v<NNNNNN>/ layout — " +
-        "cannot attribute it to a committing version for streaming")
-  }
 }
 
 /** Dual-face provider (the Delta shape): V1 [[StreamSourceProvider]]
@@ -239,9 +225,8 @@ class SnapshotStreamSourceProvider extends StreamSourceProvider with DataSourceR
       throw new IllegalArgumentException(
         s"$ShortName needs the table directory: .load(<dir>)"))
     versionOpt(options, dir) match {
-      case Some(v) => Snapshots.manifestAt(dir, v).schema.getOrElse(
-        throw new IllegalArgumentException(
-          s"$dir version $v is a legacy manifest with no recorded schema"))
+      case Some(v) => Snapshots.recordedSchema(Snapshots.manifestAt(dir, v),
+        s"version $v of $dir", "commit once to upgrade, or pass .schema(...)")
       case None => latestSchema(dir)
     }
   }
@@ -264,10 +249,8 @@ class SnapshotStreamSourceProvider extends StreamSourceProvider with DataSourceR
     require(cur >= 0,
       s"cannot infer the schema of empty snapshot table $dir — " +
         "commit a first version or pass .schema(...)")
-    Snapshots.manifestAt(dir, cur).schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"$dir version $cur is a legacy manifest with no recorded schema — " +
-          "commit once to upgrade, or pass .schema(...)"))
+    Snapshots.recordedSchema(Snapshots.manifestAt(dir, cur),
+      s"version $cur of $dir", "commit once to upgrade, or pass .schema(...)")
   }
 
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
@@ -483,184 +466,26 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
     if (cur < 0) None else Some(SnapshotSourceOffset(cur))
   }
 
-  /** Versions in [from, to] that REMOVED files (COW DML / compact),
-    * detected pairwise — the walk starts one version EARLIER so
-    * `from` itself gets its predecessor pair, and it resolves
+  /** Each version in [from, to] whose manifest still resolves, with
+    * its [[Snapshots.classify]] verdict — walked pairwise from one
+    * version EARLIER so `from` itself gets its predecessor, resolving
     * manifests [[Snapshots.vacuum]] DEMOTED to fold fodder
     * (`orDemoted`): vacuum keeps every delta chain's bases alive
     * precisely so a vacuum between triggers can never HIDE a rewrite
-    * from this walk (review r15). Also reports whether EVERY step was
-    * verifiable: a step whose predecessor is gone entirely (history
-    * reclaimed past a checkpoint manifest — the consumer lagged more
-    * than the chain) cannot be certified append-only. */
-  /** Commits provably incapable of removing files — certifiable from
-    * their own `op=` label alone when the predecessor manifest is
-    * gone (vacuum reclaimed history up to a CHECKPOINT manifest: the
-    * checkpoint's predecessor is no delta base, so it was deleted,
-    * not demoted — which previously wedged a perfectly caught-up
-    * consumer with a false "lagged" diagnostic, review r15). The
-    * change family (commit/compact/delete/update/merge/restore)
-    * attributes the same way, so skipChangeCommits keeps working. */
-  // KEEP IN SYNC with Snapshots.AppendOpsBatch (the batch change
-  // feed's twin) — a divergence makes the two faces certify
-  // predecessor-less versions differently (review r18)
-  private val AppendOps = Set("append", "stream-append", "rename",
-    "alter", "set-property")
-  private val ChangeOps = Set("commit", "compact", "delete", "update",
-    "merge", "restore")
-
-  /** What the pairwise walk over (from-1, to] found (r18 — the walk
-    * grew from a 3-tuple when change-feed mode learned to DELIVER
-    * rewrites instead of refusing them):
-    *  - `changed`: versions that rewrote delivered rows and CANNOT be
-    *    delivered as row-level changes — the refusal set;
-    *  - `verified`: every version in range could be certified;
-    *  - `dvAdds`: row positions deletion-vector commits added on
-    *    carried files, merged per file ('delete' rows, r17);
-    *  - `cdfRows`: per CDF-complete DML version, its `#cdf` change
-    *    files (r18 — delivered as-marked instead of refusing);
-    *  - `removeOnly`: per pure-file-removal version (partition delete,
-    *    TRUNCATE, remove-only restore), the removed files and their
-    *    prior DVs — the files' surviving contents ARE the version's
-    *    deletes, reconstructed with zero change files;
-    *  - `specialAdds`: data files ADDED by versions whose own row
-    *    changes are delivered through cdf/neutral paths — excluded
-    *    from insert delivery (they are rewrites, not inserts);
-    *  - `appendAdds`: per ordinary version, its own added files —
-    *    used instead of end-manifest attribution when the range mixes
-    *    appends with rewrites (a later in-range rewrite removes an
-    *    earlier append's files from the end manifest, which would
-    *    silently drop their inserts). */
-  private case class RangeChanges(
-      changed: Set[Long], verified: Boolean,
-      dvAdds: Map[String, Vector[Long]],
-      cdfRows: Map[Long, Seq[String]],
-      removeOnly: Map[Long, (Seq[String], Map[String, Vector[Long]])],
-      specialAdds: Set[String],
-      appendAdds: Map[Long, Seq[String]]) {
-    def needsPerVersion: Boolean =
-      cdfRows.nonEmpty || removeOnly.nonEmpty || specialAdds.nonEmpty
-  }
-
-  private def changeVersionsIn(from: Long, to: Long): RangeChanges = {
-    val out = Set.newBuilder[Long]
-    val dvAdds = scala.collection.mutable.Map[String, Vector[Long]]()
-    val cdfRows = scala.collection.mutable.Map[Long, Seq[String]]()
-    val removeOnly =
-      scala.collection.mutable.Map[Long, (Seq[String], Map[String, Vector[Long]])]()
-    val specialAdds = Set.newBuilder[String]
-    val appendAdds = scala.collection.mutable.Map[Long, Seq[String]]()
-    var verified = 0L
+    * from this walk (review r15). A version whose predecessor is gone
+    * entirely (history reclaimed past a checkpoint manifest) is
+    * certified by its op label inside the classifier. */
+  private def changesIn(from: Long, to: Long): Seq[(Long, Snapshots.VersionChange)] = {
     var prev: Option[Snapshots.Manifest] = None
-    var prevV = -2L
-    (math.max(from - 1, 0L) to to).foreach { v =>
-      if (Snapshots.versionExists(dir, v, orDemoted = true)) {
-        val man = Snapshots.manifestAt(dir, v, orDemoted = true)
-        def ownAdds: Seq[String] = man.files.filter(fileVersion(_) == v)
-        /** The version rewrote rows — in change-feed mode, try the
-          * r18 delivery ladder before refusing; `p` (the predecessor)
-          * is needed only by the remove-only reconstruction. */
-        def classifyRewrite(p: Option[Snapshots.Manifest]): Unit =
-          if (!changeFeed) out += v
-          else if (man.op.contains("compact")) {
-            // row-neutral by the compact/OPTIMIZE contract: content is
-            // byte-equal before and after, so the change feed delivers
-            // NOTHING for it — but its rewritten files must not read
-            // as inserts
-            specialAdds ++= ownAdds
-          } else if (man.cdfComplete) {
-            cdfRows(v) = man.cdf
-            specialAdds ++= ownAdds
-          } else {
-            val adds = ownAdds
-            p match {
-              // pure file removal requires cur ⊆ prev too: a RESTORE
-              // resurrecting an older version's files must refuse, not
-              // deliver only the removals (review r18)
-              case Some(pm) if adds.isEmpty &&
-                  man.files.forall(pm.files.toSet.contains) &&
-                  pm.files.filter(man.files.toSet).forall(rel =>
-                    pm.dvs.get(rel) == man.dvs.get(rel)) =>
-                // pure file removal: the removed files' surviving rows
-                // (prior DVs anti-applied) are exactly the deletes
-                val removed = {
-                  val cur = man.files.toSet
-                  pm.files.filterNot(cur)
-                }
-                removeOnly(v) = (removed,
-                  removed.flatMap(rel => pm.dvs.get(rel).map(rel -> _)).toMap)
-              case _ => out += v
-            }
-          }
-        if (v >= from) {
-          if (v == 0L) {
-            // the table-creating commit has no predecessor and cannot
-            // remove files: append-only by construction. Its op label
-            // is 'commit' (∈ ChangeOps), so the label branch would
-            // flag it as a rewrite — strict mode then refused a
-            // startingVersion="0" window with a false diagnostic and
-            // skipChangeCommits silently dropped every v0 file
-            // (advisor r15). Certified here, outside BOTH the changed
-            // set and the verified tally — the expected-count formula
-            // below already excludes version 0 via max(from, 1).
-            appendAdds(v) = man.files.filter(fileVersion(_) == 0L)
-          } else if (prevV == v - 1) {
-            verified += 1
-            prev.foreach { p =>
-              val cur = man.files.toSet
-              // files neither carried from the predecessor nor added
-              // by this version are RESURRECTED (a superset restore) —
-              // reappearance is not expressible as CDC, so the version
-              // is a change commit even though nothing was removed
-              // (review r18: the subset guard alone missed this shape)
-              lazy val pSet = p.files.toSet
-              def foreign = man.files.exists(rel =>
-                !pSet(rel) && fileVersion(rel) != v)
-              if (!p.files.forall(cur.contains)) classifyRewrite(Some(p))
-              else if (foreign) out += v
-              else {
-                // carried set intact: any DV drift is row-level.
-                // Outside change-feed mode it is a change commit
-                // (r16); in change-feed mode a MONOTONE drift (only
-                // positions ADDED) delivers as 'delete' rows, while a
-                // shrink (restore resurrecting rows) stays a change
-                // commit — reappearance is not expressible as CDC
-                val drifted = p.files.filter(rel =>
-                  p.dvs.get(rel) != man.dvs.get(rel))
-                if (drifted.nonEmpty) {
-                  lazy val monotone = drifted.forall { rel =>
-                    p.dvs.getOrElse(rel, Vector.empty).toSet
-                      .subsetOf(man.dvs.getOrElse(rel, Vector.empty).toSet)
-                  }
-                  if (changeFeed && monotone) {
-                    drifted.foreach { rel =>
-                      val before = p.dvs.getOrElse(rel, Vector.empty).toSet
-                      val added = man.dvs.getOrElse(rel, Vector.empty)
-                        .filterNot(before)
-                      if (added.nonEmpty)
-                        dvAdds(rel) = (dvAdds.getOrElse(rel, Vector.empty) ++
-                          added).distinct.sorted
-                    }
-                    appendAdds(v) = ownAdds // DV commits may also append
-                  } else out += v
-                } else appendAdds(v) = ownAdds
-              }
-            }
-          } else man.op match { // predecessor gone: certify by label
-            case Some(o) if AppendOps.contains(o) =>
-              verified += 1; appendAdds(v) = ownAdds
-            case Some(o) if ChangeOps.contains(o) =>
-              verified += 1; classifyRewrite(None)
-            case _ => () // unlabeled (pre-r15): genuinely unverifiable
-          }
-        }
-        prev = Some(man); prevV = v
-      } else { prev = None; prevV = -2L }
+    (math.max(from - 1, 0L) to to).flatMap { v =>
+      val man =
+        if (Snapshots.versionExists(dir, v, orDemoted = true))
+          Some(Snapshots.manifestAt(dir, v, orDemoted = true))
+        else None
+      val change = man.filter(_ => v >= from).map(m => v -> Snapshots.classify(v, prev, m))
+      prev = man
+      change
     }
-    RangeChanges(out.result(),
-      verified == math.max(0L, to - math.max(from, 1L) + 1),
-      dvAdds.toMap, cdfRows.toMap, removeOnly.toMap,
-      specialAdds.result(), appendAdds.toMap)
   }
 
   /** End version of the last COMMITTED micro-batch, from the owning
@@ -761,7 +586,7 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
         // of the append that delivered them — the Delta semantics).
         // In change-feed mode every bootstrap row is an 'insert'.
         return withChangeType(
-          readAsCaptured(man, man.files.filter(fileVersion(_) <= endV),
+          readAsCaptured(man, man.files.filter(Snapshots.fileVersion(_) <= endV),
             applyDvs = true), "insert")
       case _ => ()
     }
@@ -769,7 +594,17 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
       if (startingVersion.equalsIgnoreCase("latest")) creationVersion
       else startingVersion.toLong - 1 // change feed from exactly V on
     }
-    val rc = changeVersionsIn(boundary + 1, endV)
+    import Snapshots.VersionChange._
+    val changes = changesIn(boundary + 1, endV)
+    // outside change-feed mode every class but an append rewrote
+    // delivered rows; in it, only the unrecoverable one did
+    val changed = changes.collect {
+      case (v, Rewrite) => v
+      case (v, _: DvDelete | _: Recorded | _: Neutral | _: Removal) if !changeFeed => v
+    }
+    val certified = changes.collect { case (v, c) if c != Unverifiable => v }.toSet
+    // version 0 cannot remove files: a missing v0 needs no certificate
+    val verified = (math.max(boundary + 1, 1L) to endV).forall(certified)
     // A vacuumed END manifest reaching this point was CERTIFIED
     // against the engine's commit log above (or the caller opted
     // out with ignoreChanges): it is a replay of an
@@ -778,9 +613,9 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
     // hold even across a vacuum, because vacuum demotes
     // delta-chain bases instead of deleting them and the walk
     // above resolves those.
-    if (!endVacuumed && rc.changed.nonEmpty && !skipChange && !ignoreChanges)
+    if (!endVacuumed && changed.nonEmpty && !skipChange && !ignoreChanges)
       throw new IllegalStateException(
-        s"version(s) ${rc.changed.toSeq.sorted.mkString(", ")} of $dir " +
+        s"version(s) ${changed.mkString(", ")} of $dir " +
           "rewrote existing rows (COW delete/update or compact) — a " +
           "streaming read over an append lineage cannot deliver them " +
           "exactly-once. " + (if (changeFeed)
@@ -790,7 +625,7 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
           "pass skipChangeCommits=true to skip rewritten " +
           "files (deletes/updates unobserved) or ignoreChanges=true to " +
           "re-deliver surviving rows of rewritten files")
-    if (!endVacuumed && !rc.verified && !ignoreChanges)
+    if (!endVacuumed && !verified && !ignoreChanges)
       throw new IllegalStateException(
         s"history in ($boundary, $endV] of $dir was reclaimed past a " +
           "checkpoint manifest (the stream lagged more than the delta " +
@@ -798,46 +633,59 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
           "ignoreChanges=true to proceed (surviving rows of any rewrite " +
           "would re-deliver) or re-bootstrap from the earliest retained " +
           "snapshot")
+    // the change feed's per-version verdicts, in version order
+    val feed = if (changeFeed) changes.map(_._2) else Seq.empty
+    val rewritten = feed.flatMap {
+      case Recorded(_, rw) => rw
+      case Neutral(rw) => rw
+      case _ => Nil
+    }.toSet
     val files: Seq[String] =
-      if (changeFeed && rc.needsPerVersion && !endVacuumed)
+      if (!endVacuumed &&
+          feed.exists { case _: Recorded | _: Neutral | _: Removal => true; case _ => false })
         // PER-VERSION insert attribution (r18): a later in-range
         // rewrite removes an earlier append's files from the END
         // manifest, so end-manifest attribution would silently drop
         // those inserts — take each ordinary version's own adds from
         // its own walked manifest instead (all verified present above)
-        rc.appendAdds.toSeq.sortBy(_._1).flatMap(_._2)
+        feed.flatMap {
+          case Append(adds) => adds
+          case DvDelete(_, adds) => adds
+          case _ => Nil
+        }
       else
         man.files.filter { rel =>
-          val fv = fileVersion(rel)
+          val fv = Snapshots.fileVersion(rel)
           fv > boundary && fv <= endV &&
-            !(skipChange && rc.changed.contains(fv)) &&
-            !(changeFeed && rc.specialAdds.contains(rel))
+            !(skipChange && changed.contains(fv)) && !rewritten(rel)
         }
-    val inserts = withChangeType(readAsCaptured(man, files), "insert")
-    var out = inserts
-    if (rc.dvAdds.nonEmpty) {
-      // CHANGE FEED row-level removes (r17): the rows deletion-vector
-      // commits in (start, end] doomed, read back from their (carried,
-      // byte-identical) files by position and marked 'delete'. Earlier
-      // DVs on the same file do NOT anti-apply here — only the range's
-      // own additions are this batch's removes.
+    var out = withChangeType(readAsCaptured(man, files), "insert")
+    // CHANGE FEED row-level removes (r17): the rows deletion-vector
+    // commits in (start, end] doomed, merged per file (each version
+    // only ADDS positions, so the lists are disjoint) and read back
+    // from their (carried, byte-identical) files by position. Earlier
+    // DVs on the same file do NOT anti-apply here — only the range's
+    // own additions are this batch's removes.
+    val dvAdds = feed.foldLeft(Map.empty[String, Vector[Long]]) {
+      case (acc, DvDelete(added, _)) => added.foldLeft(acc) { case (a, (rel, pos)) =>
+        a.updated(rel, a.getOrElse(rel, Vector.empty) ++ pos)
+      }
+      case (acc, _) => acc
+    }
+    if (dvAdds.nonEmpty)
       out = out.unionByName(withChangeType(
-        readAsCaptured(man, rc.dvAdds.keys.toSeq, onlyDv = Some(rc.dvAdds)),
-        "delete"))
-    }
-    // CHANGE-DATA files (r18): COW DML versions recorded under the
-    // changeFeed table property deliver their own written change rows
-    // — pre/post-images, deletes, merge inserts — as marked
-    rc.cdfRows.toSeq.sortBy(_._1).foreach { case (_, rels) =>
-      if (rels.nonEmpty) out = out.unionByName(readCdfAsCaptured(man, rels))
-    }
-    // pure file-removal versions (r18): the removed files' surviving
-    // rows (prior DVs anti-applied) ARE the version's deletes —
-    // reconstructed from the byte-identical files, no change data
-    rc.removeOnly.toSeq.sortBy(_._1).foreach { case (_, (removed, dvs)) =>
-      if (removed.nonEmpty)
+        readAsCaptured(man, dvAdds.keys.toSeq, onlyDv = Some(dvAdds)), "delete"))
+    feed.foreach {
+      // CHANGE-DATA files (r18): recorded COW DML delivers its own
+      // written change rows — pre/post-images, deletes, merge inserts
+      case Recorded(cdf, _) if cdf.nonEmpty =>
+        out = out.unionByName(readCdfAsCaptured(man, cdf))
+      // pure file removal (r18): the removed files' surviving rows
+      // (prior DVs anti-applied) ARE the version's deletes
+      case Removal(before) =>
         out = out.unionByName(withChangeType(
-          readAsCaptured(man, removed, dropDv = Some(dvs)), "delete"))
+          readAsCaptured(man, before.files, dropDv = Some(before.dvs)), "delete"))
+      case _ => ()
     }
     out
   }

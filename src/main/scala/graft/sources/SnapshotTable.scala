@@ -60,10 +60,8 @@ class SnapshotTable(spark: SparkSession, val dir: String,
   private val man: Snapshots.Manifest =
     if (pinnedVersion >= 0) Snapshots.manifestAt(dir, pinnedVersion)
     else Snapshots.Manifest(Seq.empty, userSchema)
-  private val logical: StructType = userSchema.orElse(man.schema).getOrElse(
-    throw new IllegalArgumentException(
-      s"$dir version $pinnedVersion is a legacy manifest with no recorded schema — " +
-        "commit once to upgrade, or pass .schema(...)"))
+  private val logical: StructType = userSchema.getOrElse(Snapshots.recordedSchema(
+    man, s"version $pinnedVersion of $dir", "commit once to upgrade, or pass .schema(...)"))
   private val colMap: Seq[Snapshots.ColumnId] = Snapshots.colMapOf(man)
 
   override def name(): String =

@@ -156,9 +156,8 @@ object SnapshotBatchScan {
             logicalOf: String => String,
             partValuesOf: String => Seq[(String, Option[String])]): SnapshotScan = {
     val cls = spark.asInstanceOf[ClassicSession]
-    val logical = man.schema.getOrElse(throw new IllegalArgumentException(
-      s"snapshot table $dir has a legacy manifest with no recorded schema — " +
-        "commit once to upgrade before SQL reads"))
+    val logical = Snapshots.recordedSchema(man, s"snapshot table $dir",
+      "commit once to upgrade before SQL reads")
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
     val partPhys = man.partitionBy.map(lc).toSet
 
