@@ -44,8 +44,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * its data directory BEFORE publishing).
   *
   * Manifest format v3 (v2 and v1 — a bare file list — remain
-  * readable; v2 readers would even read a v3 manifest, since every
-  * v3 addition is a '#'-prefixed line they already skip):
+  * readable: [[readManifest]] normalizes them into the v3 shape, so no
+  * other code knows a manifest's generation; v2 readers would even
+  * read a v3 manifest, since every v3 addition is a '#'-prefixed line
+  * they already skip):
   * {{{
   *   #graft-manifest v=3 schema=<base64(StructType.json)> cols=<base64(mapping)>
   *   data/v000000/part-....parquet
@@ -95,13 +97,16 @@ object Snapshots {
     * first commit). */
   final case class ColumnId(id: Int, logical: String, physical: String)
 
-  /** A version's resolved manifest: relative file list, the recorded
-    * schema (absent on legacy v1 manifests), the column mapping
-    * (empty = identity: physical == logical, pre-v3 manifests),
-    * per-file stats keyed by relative path (missing = unprunable),
-    * and per-file byte sizes (missing = pre-r15 manifest; metadata
-    * consumers fall back to one FS stat for those files only). */
-  final case class Manifest(files: Seq[String], schema: Option[StructType],
+  /** A version's resolved manifest, always in the v3 shape whatever
+    * generation is on disk ([[readManifest]] normalizes older ones):
+    * relative file list, the schema, the column mapping, per-file
+    * stats keyed by relative path (missing = unprunable), and per-file
+    * byte sizes (missing = pre-r15 manifest; metadata consumers fall
+    * back to one FS stat for those files only). `syntheticIds` marks a
+    * mapping [[readManifest]] made up (identity from the schema) for a
+    * manifest that records none — only the column pairing reads it
+    * ([[readAligned]] and the stream source's `readAsCaptured`). */
+  final case class Manifest(files: Seq[String], schema: StructType,
                             colMap: Seq[ColumnId] = Seq.empty,
                             stats: Map[String, SnapshotStats.FileStats] = Map.empty,
                             maxColId: Int = 0,
@@ -116,14 +121,8 @@ object Snapshots {
                             ts: Option[Long] = None,
                             props: Map[String, String] = Map.empty,
                             cdf: Seq[String] = Seq.empty,
-                            cdfComplete: Boolean = false)
-
-  /** `man`'s recorded schema, or THE refusal for a legacy (v1)
-    * manifest, which records none: `where` names the version,
-    * `action` says what the caller can do instead. */
-  def recordedSchema(man: Manifest, where: String, action: String): StructType =
-    man.schema.getOrElse(throw new IllegalArgumentException(
-      s"$where is a legacy (v1) manifest with no recorded schema — $action"))
+                            cdfComplete: Boolean = false,
+                            syntheticIds: Boolean = false)
 
   private def hconf(): Configuration =
     SparkSession.getActiveSession
@@ -383,12 +382,38 @@ object Snapshots {
   private def basePath(root: Path, v: Long): Path =
     new Path(root, f"_b$v%06d.basemanifest")
 
-  /** @param allowBase resolve a version that was demoted to fold
-    *   fodder (`_b*.basemanifest`) — ONLY the delta fold passes true;
-    *   every public read keeps the strict "version does not exist"
-    *   contract for vacuumed versions. */
+  /** Version `v`'s manifest in the v3 shape — the ONE place that knows
+    * a manifest's on-disk generation. A legacy v1 bare file list gets
+    * its schema inferred from its files (parquet inference, what [[read]]
+    * has always served for it); a pre-v3 manifest (no `cols=`) gets the
+    * identity mapping from its schema, flagged `syntheticIds`.
+    *
+    * @param allowBase resolve a version that was demoted to fold
+    *   fodder (`_b*.basemanifest`) — ONLY the streaming and change-feed
+    *   walks pass true; every public read keeps the strict "version
+    *   does not exist" contract for vacuumed versions. */
   private[operators] def readManifest(f: FileSystem, root: Path, v: Long,
                                       allowBase: Boolean = false): Manifest = {
+    val m = parseManifest(f, root, v, allowBase)
+    if (!m.syntheticIds) m
+    else {
+      // only a v1 bare file list records no schema (no parquet file
+      // has zero columns)
+      val schema =
+        if (m.schema.nonEmpty || m.files.isEmpty) m.schema
+        else SparkSession.active.read
+          .parquet(m.files.map(rel => new Path(root, rel).toString): _*).schema
+      val ids = identityMap(schema)
+      m.copy(schema = schema, colMap = ids, maxColId = math.max(m.maxColId, ids.size))
+    }
+  }
+
+  /** Version `v`'s manifest as stored: a v1 bare file list has an
+    * empty schema, a pre-v3 manifest an empty mapping. Readers that
+    * need only files, txn or base (the delta fold, vacuum, the stream
+    * ledger walk) read through this and never infer. */
+  private def parseManifest(f: FileSystem, root: Path, v: Long,
+                            allowBase: Boolean = false): Manifest = {
     val m0 = manifestPath(root, v)
     val m =
       if (f.exists(m0)) m0
@@ -402,6 +427,7 @@ object Snapshots {
           DataType.fromJson(new String(
             Base64.getDecoder.decode(s.stripPrefix("schema=")),
             StandardCharsets.UTF_8)).asInstanceOf[StructType] }
+        .getOrElse(new StructType())
       val colMap = headerParts
         .collectFirst { case s if s.startsWith("cols=") =>
           decodeColMap(s.stripPrefix("cols=")) }
@@ -528,17 +554,19 @@ object Snapshots {
         .filter(_.startsWith("#dv "))
         .flatMap(decodeDvLine)
         .toMap
+      val syntheticIds = colMap.isEmpty
       base match {
         case None =>
           Manifest(adds, schema, colMap, stats, maxColId, txn, retired, sizes,
             partitionBy, base = None, depth = 0, op = op, dvs = dvs, ts = ts,
-            props = props, cdf = cdf, cdfComplete = cdfComplete)
+            props = props, cdf = cdf, cdfComplete = cdfComplete,
+            syntheticIds = syntheticIds)
         case Some(b) =>
           // FOLD: base's folded state minus removes plus adds — the
           // relative order (survivors first, in base order, then adds)
           // reproduces exactly what the equivalent full manifest would
           // have listed, so readers see byte-identical file lists
-          val bm = readManifest(f, root, b, allowBase = true)
+          val bm = parseManifest(f, root, b, allowBase = true)
           val removed = removes.toSet
           Manifest(
             bm.files.filterNot(removed) ++ adds,
@@ -548,7 +576,8 @@ object Snapshots {
             (bm.sizes -- removed) ++ sizes,
             partitionBy, base = Some(b), depth = depth, op = op,
             dvs = (bm.dvs -- removed) ++ dvs, ts = ts,
-            props = props, cdf = cdf, cdfComplete = cdfComplete)
+            props = props, cdf = cdf, cdfComplete = cdfComplete,
+            syntheticIds = syntheticIds)
       }
     } else if (lines.exists(l => l.nonEmpty && l.startsWith("#"))) {
       // a '#' line without the full v2 header can only be a manifest
@@ -560,7 +589,8 @@ object Snapshots {
           "the publishing commit crashed mid-write; re-commit or remove the manifest")
     } else {
       // legacy v1: bare file list, no schema, no trailer
-      Manifest(lines.filter(_.nonEmpty).toSeq, None)
+      Manifest(lines.filter(_.nonEmpty).toSeq, new StructType(),
+        syntheticIds = true)
     }
   }
 
@@ -676,21 +706,18 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot set a property on an empty table $dir — commit first")
     val prev = readManifest(f, root, v - 1)
-    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
-      "commit once to upgrade before setting properties")
-    val map = colMapOf(prev)
     val props = changes.foldLeft(prev.props) {
       case (acc, (k, Some(x))) => acc + (k -> x)
       case (acc, (k, None)) => acc - k
     }
     if (deltaOk(prev))
       publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
-        schema, map, Map.empty, Map.empty, prev.maxColId, txn = None,
+        prev.schema, prev.colMap, Map.empty, Map.empty, prev.maxColId, txn = None,
         retired = prev.retired, partitionBy = prev.partitionBy,
         op = "set-property", props = props)
     else
-      publish(f, root, v, prev.files, schema, map, prev.stats, prev.maxColId,
-        txn = None, retired = prev.retired, sizes = prev.sizes,
+      publish(f, root, v, prev.files, prev.schema, prev.colMap, prev.stats,
+        prev.maxColId, txn = None, retired = prev.retired, sizes = prev.sizes,
         partitionBy = prev.partitionBy, op = "set-property", dvs = prev.dvs,
         props = props)
     v
@@ -741,9 +768,8 @@ object Snapshots {
     require(startingVersion >= 0 && startingVersion <= to && to <= cur,
       s"change-feed range [$startingVersion, $to] outside committed 0..$cur")
     val toMan = manifestAt(dir, to, orDemoted = true)
-    val toSchema = recordedSchema(toMan, s"version $to of $dir",
-      "commit once to upgrade before reading the change feed")
-    val toMap = colMapOf(toMan)
+    val toSchema = toMan.schema
+    val toMap = toMan.colMap
     Seq(ChangeTypeCol, CommitVersionCol).foreach { reserved =>
       require(!toSchema.fieldNames.exists(_.equalsIgnoreCase(reserved)),
         s"table $dir has a column named '$reserved' — rename it before " +
@@ -785,10 +811,10 @@ object Snapshots {
           insertsOf(adds)
         case VersionChange.Recorded(cdf, _) => if (cdf.nonEmpty) {
           val physSchema = StructType(
-            man.schema.getOrElse(toSchema).fields.map(fd =>
-              fd.copy(name = physicalOf(colMapOf(man), fd.name))) :+
+            man.schema.fields.map(fd =>
+              fd.copy(name = physicalOf(man.colMap, fd.name))) :+
               StructField(ChangeTypeCol, StringType, nullable = true))
-          frames += project(readAs(spark, root, cdf, Some(physSchema)), None, v)
+          frames += project(readAs(spark, root, cdf, physSchema), None, v)
         }
         case VersionChange.Neutral(_) => ()
         case VersionChange.Removal(before) =>
@@ -1018,8 +1044,8 @@ object Snapshots {
     writeManifestAtomic(f, root, v, manifestPath(root, v), body)
   }
 
-  /** `#cdf` body lines + the `#cdfv` completeness marker (see the
-    * readManifest parse for semantics). */
+  /** `#cdf` body lines + the `#cdfv` completeness marker (see
+    * [[parseManifest]] for semantics). */
   private def cdfLines(cdf: Seq[String], cdfComplete: Boolean): Seq[String] =
     cdf.sorted.map(rel => s"#cdf ${b64s(rel)}") ++
       (if (cdfComplete) Seq("#cdfv") else Seq.empty)
@@ -1221,12 +1247,6 @@ object Snapshots {
   }
 
   // --- column mapping ----------------------------------------------
-
-  /** A manifest's mapping with the legacy fallback applied: pre-v3
-    * manifests (no `cols=`) are identity-mapped from their schema. */
-  private[graft] def colMapOf(man: Manifest): Seq[ColumnId] =
-    if (man.colMap.nonEmpty) man.colMap
-    else man.schema.map(identityMap).getOrElse(Seq.empty)
 
   private def identityMap(schema: StructType): Seq[ColumnId] =
     schema.fields.zipWithIndex.map { case (fd, i) => ColumnId(i + 1, fd.name, fd.name) }.toSeq
@@ -1463,7 +1483,7 @@ object Snapshots {
         Map.empty[String, String])
       else {
         val prev = readManifest(f, root, v - 1)
-        (colMapOf(prev), prev.maxColId, prev.retired, prev.props)
+        (prev.colMap, prev.maxColId, prev.retired, prev.props)
       }
     val map = continueMap(prevMap, df.schema, idFloor, prevRetired.toSet)
     val retired = retireDropped(prevRetired, prevMap, map)
@@ -1538,22 +1558,11 @@ object Snapshots {
     while (result < 0) {
       val v = nextVersion(dir, expectedVersion)
       val prev =
-        if (v == 0) Manifest(Seq.empty, None)
+        if (v == 0) Manifest(Seq.empty, new StructType())
         else readManifest(f, root, v - 1)
-      val prevSchema = prev.schema match {
-        case s @ Some(_) => s
-        case None if prev.files.isEmpty => None
-        case None =>
-          // legacy v1 base: infer its schema once so the merged schema
-          // still covers the old files
-          Some(read(df.sparkSession, dir, v - 1).schema)
-      }
-      val schema = prevSchema.fold(df.schema)(mergeSchemas(_, df.schema))
-      val prevMap = prevSchema.fold(Seq.empty[ColumnId]) { ps =>
-        if (prev.colMap.nonEmpty) prev.colMap else identityMap(ps)
-      }
-      val map = continueMap(prevMap, schema, prev.maxColId, prev.retired.toSet)
-      val retired = retireDropped(prev.retired, prevMap, map)
+      val schema = if (v == 0) df.schema else mergeSchemas(prev.schema, df.schema)
+      val map = continueMap(prev.colMap, schema, prev.maxColId, prev.retired.toSet)
+      val retired = retireDropped(prev.retired, prev.colMap, map)
       var retry = false
       written match {
         case None if autoRebase && attempt < MaxAppendRebase &&
@@ -1691,7 +1700,7 @@ object Snapshots {
     var v = currentVersion(dir)
     val floor = math.max(0L, earliestVersion(dir))
     while (v >= floor && walked.isEmpty) {
-      readManifest(f, root, v).txn match {
+      parseManifest(f, root, v).txn match {
         case Some((a, b)) if a == appId => walked = Some(b)
         case _ => v -= 1
       }
@@ -1866,7 +1875,7 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"nothing to compact: no committed version in $dir")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(readManifested(spark, root, prev, None).schema)
+    val schema = prev.schema
     (clusterBy ++ zOrderBy).foreach { c =>
       require(schema.exists(fd => sameCol(fd.name, c)),
         s"cluster column '$c' not in table schema")
@@ -1950,10 +1959,9 @@ object Snapshots {
         current.repartitionByRange(nOut, clusterBy.map(quoted): _*)
           .sortWithinPartitions(clusterBy.map(quoted): _*)
       else current.coalesce(nOut) // shrink without a shuffle
-    val map = if (prev.colMap.nonEmpty) prev.colMap else identityMap(schema)
-    val (files, stats, sizes) = writeWithStats(arranged, map, f, root, v,
+    val (files, stats, sizes) = writeWithStats(arranged, prev.colMap, f, root, v,
       partByPhys = prev.partitionBy)
-    publish(f, root, v, files, schema, map, stats, prev.maxColId,
+    publish(f, root, v, files, schema, prev.colMap, stats, prev.maxColId,
       txn = None, retired = prev.retired, sizes = sizes,
       partitionBy = prev.partitionBy, op = "compact", props = prev.props)
     v
@@ -1973,15 +1981,14 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot rename a column of an empty table $dir")
     val prev = readManifest(f, root, v - 1)
-    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
-      "commit once to upgrade before renaming")
+    val schema = prev.schema
     val idx = schema.fields.indexWhere(fd => sameCol(fd.name, from))
     require(idx >= 0, s"no column '$from' in $dir (have: ${schema.fieldNames.mkString(", ")})")
     require(!schema.fields.zipWithIndex.exists { case (fd, i) =>
       i != idx && sameCol(fd.name, to) },
       s"cannot rename '$from' to '$to': a column '$to' already exists")
     val newSchema = StructType(schema.fields.updated(idx, schema.fields(idx).copy(name = to)))
-    val map = colMapOf(prev).map(c =>
+    val map = prev.colMap.map(c =>
       if (sameCol(c.logical, from)) c.copy(logical = to) else c)
     // metadata-only: as a delta this commits O(1) manifest bytes — the
     // file list never leaves the base (judge r14 #6's rename case)
@@ -2008,9 +2015,7 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"cannot $op on an empty table $dir")
     val prev = readManifest(f, root, v - 1)
-    val schema = recordedSchema(prev, s"version ${v - 1} of $dir",
-      s"commit once to upgrade before $op")
-    val (newSchema, map) = change(schema, prev)
+    val (newSchema, map) = change(prev.schema, prev)
     if (deltaOk(prev))
       publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
         newSchema, map, Map.empty, Map.empty, prev.maxColId, txn = None,
@@ -2053,7 +2058,7 @@ object Snapshots {
       case _ => "alter"
     }
     publishSchemaChange(dir, opLabel, expectedVersion) { (schema0, prev) =>
-      changes.foldLeft((schema0, colMapOf(prev))) { case ((schema, map), c) =>
+      changes.foldLeft((schema0, prev.colMap)) { case ((schema, map), c) =>
         c match {
           case SchemaChange.AddColumn(name, dt) =>
             require(!schema.fields.exists(fd => sameCol(fd.name, name)),
@@ -2113,8 +2118,8 @@ object Snapshots {
 
   /** Read a specific version (default: latest) in its RECORDED
     * schema: a mixed-generation file list (appends after a column
-    * add) reads with the missing columns as NULL. Legacy v1
-    * manifests fall back to parquet schema inference.
+    * add) reads with the missing columns as NULL. (A legacy v1
+    * manifest's schema is inferred from its files by [[readManifest]].)
     *
     * `predicate` (over LOGICAL column names) turns on manifest-level
     * data skipping: only files whose recorded stats ranges may
@@ -2140,14 +2145,9 @@ object Snapshots {
       case Some(p) => pruneFiles(man, p)
       case None => man.files
     }
-    val base = man.schema match {
-      case Some(logical) =>
-        val map = colMapOf(man)
-        readPhysical(spark, root, man, files)
-          .select(logical.fields.toSeq.map(fd =>
-            quoted(physicalOf(map, fd.name)).as(fd.name)): _*)
-      case None => readAs(spark, root, files, None)
-    }
+    val base = readPhysical(spark, root, man, files)
+      .select(man.schema.fields.toSeq.map(fd =>
+        quoted(physicalOf(man.colMap, fd.name)).as(fd.name)): _*)
     predicate.fold(base)(base.filter)
   }
 
@@ -2192,14 +2192,12 @@ object Snapshots {
                                   files: Seq[String],
                                   keepMeta: Boolean = false): DataFrame = {
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val physSchemaOpt = man.schema.map { logical =>
-      val map = colMapOf(man)
-      StructType(logical.fields.map(fd => fd.copy(name = physicalOf(map, fd.name))))
-    }
+    val physSchema = StructType(man.schema.fields.map(fd =>
+      fd.copy(name = physicalOf(man.colMap, fd.name))))
     /** `withMeta`: the returned rows carry [[DvPosCol]]/[[DvFileCol]]. */
     def scanGroup(fs: Seq[String], dv: Option[Vector[Long]],
                   withMeta: Boolean): DataFrame = {
-      def raw(schema: Option[StructType], paths: Seq[String]): DataFrame = {
+      def raw(schema: StructType, paths: Seq[String]): DataFrame = {
         val b0 = readAs(spark, root, paths, schema)
         if (paths.isEmpty || (dv.isEmpty && !withMeta)) b0
         else {
@@ -2210,18 +2208,15 @@ object Snapshots {
           if (withMeta) b2 else b2.drop(DvPosCol, DvFileCol)
         }
       }
-      if (man.partitionBy.isEmpty) raw(physSchemaOpt, fs)
-      else {
-        val physSchema = physSchemaOpt.getOrElse(throw new IllegalStateException(
-          "partitioned manifests always record a schema"))
+      if (man.partitionBy.isEmpty) raw(physSchema, fs)
+      else
         partitionedScan(man, fs, physSchema,
-          scan = (dataSchema, f2) => raw(Some(dataSchema), f2),
+          scan = (dataSchema, f2) => raw(dataSchema, f2),
           empty = sc => readAs(spark, root, Seq.empty,
-            Some(if (withMeta) StructType(sc.fields ++ Seq(
+            if (withMeta) StructType(sc.fields ++ Seq(
               StructField(DvPosCol, org.apache.spark.sql.types.LongType),
-              StructField(DvFileCol, StringType))) else sc)),
+              StructField(DvFileCol, StringType))) else sc),
           extra = if (withMeta) Seq(DvPosCol, DvFileCol) else Seq.empty)
-      }
     }
     def fileNameOf(rel: String): String =
       rel.substring(rel.lastIndexOf('/') + 1)
@@ -2323,13 +2318,11 @@ object Snapshots {
     * hive NULL marker), so a predicate on a partition column prunes
     * exactly — before stats, before footers, before any task. */
   private[graft] def pruneFiles(man: Manifest, pred: org.apache.spark.sql.Column): Seq[String] = {
-    val schema = man.schema.getOrElse(return man.files)
     if (man.stats.isEmpty && man.partitionBy.isEmpty) return man.files
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val map = colMapOf(man)
     val partLc = man.partitionBy.map(lc).toSet
     val expr = org.apache.spark.sql.graft.ColumnBridge.expression(pred)
-    val typeOf = (l: String) => schema.find(fd => sameCol(fd.name, l)).map(_.dataType)
+    val typeOf = (l: String) => man.schema.find(fd => sameCol(fd.name, l)).map(_.dataType)
     man.files.filter { rel =>
       val fsOpt = man.stats.get(rel)
       val rows = fsOpt.map(_.rows).getOrElse(Long.MaxValue) // unknown: never 0
@@ -2338,7 +2331,7 @@ object Snapshots {
         else partitionValuesOf(rel, man.partitionBy)
           .map { case (k, v) => lc(k) -> v }.toMap
       val statsFor: String => Option[SnapshotStats.ColStats] = l => {
-        val phys = physicalOf(map, l)
+        val phys = physicalOf(man.colMap, l)
         if (partLc(lc(phys)))
           pvals.get(lc(phys)).flatMap {
             case Some(raw) =>
@@ -2373,17 +2366,10 @@ object Snapshots {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed version in $dir")
     val latest = readManifest(f, root, cur)
-    val target = latest.schema.getOrElse(read(spark, dir, cur).schema)
-    val targetNullable = StructType(target.fields.map(_.copy(nullable = true)))
+    val target = latest.schema
     val own = readManifest(f, root, version)
-    if (own.schema.isEmpty) {
-      // legacy v1 version: no recorded schema, no stats — exactly the
-      // pre-v3 behavior (by-name parquet resolution into the target)
-      val base = readAs(spark, root, own.files, Some(targetNullable))
-      return predicate.fold(base)(base.filter)
-    }
-    val ownSchema = own.schema.get
-    val ownMap = colMapOf(own)
+    val ownSchema = own.schema
+    val ownMap = own.colMap
     // the old version's PHYSICAL name for a target column. Paired by
     // stable column ID when both manifests record ids; by
     // (case-insensitive) name otherwise — legacy manifests' synthetic
@@ -2394,11 +2380,11 @@ object Snapshots {
     // that version's data under the original spelling instead of
     // silently reading NULL (review r14).
     def ownPhysical(tf: StructField): Option[String] =
-      if (latest.colMap.nonEmpty && own.colMap.nonEmpty)
+      if (!latest.syntheticIds && !own.syntheticIds)
         latest.colMap.find(c => sameCol(c.logical, tf.name))
-          .flatMap(t => own.colMap.find(_.id == t.id).map(_.physical))
+          .flatMap(t => ownMap.find(_.id == t.id).map(_.physical))
       else {
-        val targetPhysical = physicalOf(colMapOf(latest), tf.name)
+        val targetPhysical = physicalOf(latest.colMap, tf.name)
         ownSchema.find(fd => sameCol(fd.name, tf.name))
           .orElse(ownSchema.find(fd => sameCol(fd.name, targetPhysical)))
           .map(fd => physicalOf(ownMap, fd.name))
@@ -2462,21 +2448,11 @@ object Snapshots {
   }
 
   private def readAs(spark: SparkSession, root: Path, files: Seq[String],
-                     schema: Option[StructType]): DataFrame = {
+                     schema: StructType): DataFrame =
     if (files.isEmpty)
-      schema match {
-        case Some(sc) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-        case None => spark.emptyDataFrame
-      }
-    else {
-      val paths = files.map(rel => new Path(root, rel).toString)
-      schema match {
-        case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    }
-  }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else
+      spark.read.schema(schema).parquet(files.map(rel => new Path(root, rel).toString): _*)
 
   /** Copy-on-write DELETE — the stats layer's write-path payoff:
     * remove every row where `pred` IS TRUE, rewriting ONLY the files
@@ -2521,9 +2497,8 @@ object Snapshots {
       val prev = readManifest(f, rootOf(f, dir), cur)
       if (prev.partitionBy.nonEmpty) {
         def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-        val map = colMapOf(prev)
         val partLogical = prev.partitionBy.flatMap(p =>
-          map.find(c => lc(c.physical) == lc(p)).map(c => lc(c.logical))).toSet
+          prev.colMap.find(c => lc(c.physical) == lc(p)).map(c => lc(c.logical))).toSet
         if (predicateCols(pred).forall(partLogical.contains))
           // hand over the manifest this gate already resolved (a
           // delta fold is up to DeltaChainLimit manifest GETs — don't
@@ -2568,9 +2543,8 @@ object Snapshots {
     val prev = readManifest(f, root, v - 1)
     val touched = pruneFiles(prev, pred)
     if (touched.isEmpty) return v - 1 // provably nothing to do
-    val schema = prev.schema.getOrElse(
-      readManifested(spark, root, prev, None).schema)
-    val map = if (prev.colMap.nonEmpty) prev.colMap else identityMap(schema)
+    val schema = prev.schema
+    val map = prev.colMap
     // logical view of the touched slice + attribution columns
     val phys = readPhysical(spark, root, prev, touched, keepMeta = true)
     val logical = phys.select(schema.fields.toSeq.map(fd =>
@@ -2665,9 +2639,8 @@ object Snapshots {
     require(v - 1 == readAt,
       s"concurrent commit: table moved from $readAt to ${v - 1} while " +
         "planning the partition delete — rebase and retry")
-    val schema = prev.schema.getOrElse(throw new IllegalStateException(
-      "partitioned manifests always record a schema"))
-    val map = colMapOf(prev)
+    val schema = prev.schema
+    val map = prev.colMap
     // logical field per partition level, in layout order
     val partFields = prev.partitionBy.map { p =>
       map.find(c => lc(c.physical) == lc(p))
@@ -2789,7 +2762,7 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"no committed version in $dir — commit a base before merging")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(readManifested(spark, root, prev, None).schema)
+    val schema = prev.schema
     val keyField = schema.find(fd => sameCol(fd.name, key)).getOrElse(
       throw new IllegalArgumentException(
         s"merge key '$key' not in table schema (${schema.fieldNames.mkString(", ")})"))
@@ -2829,7 +2802,7 @@ object Snapshots {
       }
       val keys = src.select(quoted(keyName).as(keyName)).distinct()
       val keySide = if (keys.count() <= maxBroadcastKeys) broadcast(keys) else keys
-      val map = if (prev.colMap.nonEmpty) prev.colMap else identityMap(schema)
+      val map = prev.colMap
       val slice = readManifested(spark, root, prev.copy(files = touched), None)
       val survivors = slice.join(keySide, Seq(keyName), "left_anti")
       val incoming0 = deleteWhenMatched.fold(src)(c =>
@@ -2937,8 +2910,8 @@ object Snapshots {
     val v = nextVersion(dir, expectedVersion)
     require(v > 0, s"no committed version in $dir — commit a base before merging")
     val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema.getOrElse(readManifested(spark, root, prev, None).schema)
-    val map = if (prev.colMap.nonEmpty) prev.colMap else identityMap(schema)
+    val schema = prev.schema
+    val map = prev.colMap
     val keyFields = keys.map { k =>
       schema.find(fd => sameCol(fd.name, k)).getOrElse(
         throw new IllegalArgumentException(
@@ -3120,9 +3093,8 @@ object Snapshots {
       val t = touched.toSet
       prev.files.filterNot(t)
     }
-    val schema = prev.schema.getOrElse(
-      readManifested(spark, root, prev, None).schema)
-    val map = if (prev.colMap.nonEmpty) prev.colMap else identityMap(schema)
+    val schema = prev.schema
+    val map = prev.colMap
     val slice = readManifested(spark, root, prev.copy(files = touched), None)
     val rewritten = transform(slice)
     // Locale.ROOT, matching sameCol semantics everywhere else in the
@@ -3198,8 +3170,7 @@ object Snapshots {
       // tell one story
       val committedAt: java.sql.Timestamp = new java.sql.Timestamp(
         man.ts.getOrElse(f.getFileStatus(manifestPath(root, v)).getModificationTime))
-      (v, man.files.size, rowCount, bytes,
-        man.schema.map(_.fields.length).getOrElse(-1),
+      (v, man.files.size, rowCount, bytes, man.schema.length,
         man.txn.map(_._1).orNull, man.txn.map(t => java.lang.Long.valueOf(t._2)).orNull,
         man.op.orNull, committedAt)
     }
@@ -3230,16 +3201,13 @@ object Snapshots {
     require(v > 0, s"no committed version in $dir")
     val target = readManifest(f, root, version)
     val prev = readManifest(f, root, v - 1)
-    val schema = recordedSchema(target, s"version $version of $dir",
-      "restore needs a schema-bearing target")
-    val targetMap = colMapOf(target)
     // retire every physical the CURRENT head uses that the restored
     // mapping does not — the lifetime-uniqueness invariant survives
     // the rewind (a post-restore column add can never collide with a
     // rolled-back column's physical)
-    val retired = retireDropped(prev.retired, colMapOf(prev), targetMap)
-    publish(f, root, v, target.files, schema, targetMap, target.stats,
-      math.max(prev.maxColId, targetMap.foldLeft(0)((m, c) => math.max(m, c.id))),
+    val retired = retireDropped(prev.retired, prev.colMap, target.colMap)
+    publish(f, root, v, target.files, target.schema, target.colMap, target.stats,
+      math.max(prev.maxColId, target.maxColId),
       txn = None, retired = retired, sizes = target.sizes,
       partitionBy = target.partitionBy, op = "restore", dvs = target.dvs,
       // properties are the HEAD's, not the restored version's: a
@@ -3285,9 +3253,8 @@ object Snapshots {
     val v = if (version >= 0) version else currentVersion(dir)
     require(v >= 0, s"no committed version in $dir")
     val man = readManifest(f, root, v)
-    val map = colMapOf(man)
     def logicalOf(physical: String): String =
-      map.find(_.physical == physical).map(_.logical).getOrElse(physical)
+      man.colMap.find(_.physical == physical).map(_.logical).getOrElse(physical)
     val rows = man.files.flatMap { rel =>
       man.stats.get(rel) match {
         case Some(fs) =>
@@ -3339,9 +3306,7 @@ object Snapshots {
       .filter(rel => mo.dvs.get(rel) == mn.dvs.get(rel))
     val onlyO = mo.files.filterNot(shared)
     val onlyN = mn.files.filterNot(shared)
-    def keyType: DataType =
-      mn.schema.orElse(mo.schema).map(_.apply(key).dataType)
-        .getOrElse(read(spark, dir, vNew).schema(key).dataType)
+    def keyType: DataType = mn.schema(key).dataType
     // subset reads stay logical-name-correct under column mapping
     def readSubset(man: Manifest, files: Seq[String]): DataFrame =
       readManifested(spark, root, man.copy(files = files), None)
@@ -3510,7 +3475,7 @@ object Snapshots {
     val cur = currentVersion(dir)
     require(keepFrom <= cur, s"keepFrom $keepFrom beyond current $cur")
     val keep: Set[String] = (keepFrom to cur).flatMap { v =>
-      if (f.exists(manifestPath(root, v))) readManifest(f, root, v).files
+      if (f.exists(manifestPath(root, v))) parseManifest(f, root, v).files
       else Seq.empty
     }.toSet
     // Before dropping a txn-carrying manifest, fold its batch id into
@@ -3540,7 +3505,7 @@ object Snapshots {
       (0L until keepFrom).flatMap { v =>
         if (f.exists(manifestPath(root, v))) {
           try {
-            val man = readManifest(f, root, v)
+            val man = parseManifest(f, root, v)
             Some((v, man.files, man.txn))
           } catch {
             // IllegalArgumentException = torn trailer/header;
@@ -3564,11 +3529,11 @@ object Snapshots {
       val out = scala.collection.mutable.Set[Long]()
       (keepFrom to cur).foreach { v =>
         if (f.exists(manifestPath(root, v))) {
-          var b = scala.util.Try(readManifest(f, root, v).base).toOption.flatten
+          var b = scala.util.Try(parseManifest(f, root, v).base).toOption.flatten
           while (b.isDefined && !out.contains(b.get)) {
             out += b.get
             b = scala.util.Try(
-              readManifest(f, root, b.get, allowBase = true).base).toOption.flatten
+              parseManifest(f, root, b.get, allowBase = true).base).toOption.flatten
           }
         }
       }

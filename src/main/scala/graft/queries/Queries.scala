@@ -2229,13 +2229,11 @@ object Queries {
       (-1L, "Contact john.doe@example.com or call 555-123-4567 for details"),
       (-2L, "Multiple emails: a.b@test.org and c_d@mail.co plus host 192.168.1.100"),
       (-3L, "no pii in this row at all")).toDF("doc_id", "text")
-    // repartition before six regex passes over every text: the
-    // single-row-group bench file otherwise pins them to one thread.
-    // Count is the session's parallelism (r18), not a constant 32
-    // tuned for the local bench — at any core count the regex work
-    // spreads over every core.
-    val all = docs(s, d).select(col("doc_id"), col("text")).unionByName(planted)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    // six regex passes over every text are compute-bound — heal the
+    // single-split bench scan (guide §2.5; no-op on multi-split input)
+    val all = Tables.parallelizeSingleSplitScan(
+      docs(s, d).select(col("doc_id"), col("text")), col("doc_id"))
+      .unionByName(planted)
     val redacted = regexp_replace(
       regexp_replace(
         regexp_replace(col("text"), emailRe, "[EMAIL]"),

@@ -344,7 +344,7 @@ object QueriesOps {
       // inlined a fresh copy of the 512-double literal into each of the
       // SIXTEEN (v − c) factors — an ~8k-leaf expression tree whose
       // analyzer/optimizer passes cost ~0.9 s of driver time per query
-      // (JobProbe: 1.9 s warm run, only 1.0 s inside Spark jobs). Same
+      // (Probe jobs: 1.9 s warm run, only 1.0 s inside Spark jobs). Same
       // arithmetic, same decimal casts — only the tree shrinks.
       val sums = comps
         .withColumn("crow", element_at(cbLit, (col("dim") + 1).cast("int")))

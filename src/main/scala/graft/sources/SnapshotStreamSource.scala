@@ -225,8 +225,7 @@ class SnapshotStreamSourceProvider extends StreamSourceProvider with DataSourceR
       throw new IllegalArgumentException(
         s"$ShortName needs the table directory: .load(<dir>)"))
     versionOpt(options, dir) match {
-      case Some(v) => Snapshots.recordedSchema(Snapshots.manifestAt(dir, v),
-        s"version $v of $dir", "commit once to upgrade, or pass .schema(...)")
+      case Some(v) => Snapshots.manifestAt(dir, v).schema
       case None => latestSchema(dir)
     }
   }
@@ -249,8 +248,7 @@ class SnapshotStreamSourceProvider extends StreamSourceProvider with DataSourceR
     require(cur >= 0,
       s"cannot infer the schema of empty snapshot table $dir — " +
         "commit a first version or pass .schema(...)")
-    Snapshots.recordedSchema(Snapshots.manifestAt(dir, cur),
-      s"version $cur of $dir", "commit once to upgrade, or pass .schema(...)")
+    Snapshots.manifestAt(dir, cur).schema
   }
 
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
@@ -434,14 +432,13 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
     SnapshotSourceOffset(-1L)
 
   /** Captured column mapping: the latest manifest's (id, physical)
-    * per captured column at stream start — empty for a pre-mapping
-    * table or a user-specified schema over an empty table (falls
-    * back to by-name pairing, the readAligned legacy arm). */
+    * per captured column at stream start — empty for a user-specified
+    * schema over an empty table (falls back to by-name pairing). */
   private val capturedMap: Seq[Snapshots.ColumnId] = {
     val cur = Snapshots.currentVersion(dir)
     if (cur < 0) Seq.empty
     else {
-      val m = Snapshots.colMapOf(Snapshots.manifestAt(dir, cur))
+      val m = Snapshots.manifestAt(dir, cur).colMap
       captured.fields.toSeq.flatMap(fd =>
         m.find(_.logical.equalsIgnoreCase(fd.name)))
     }
@@ -691,8 +688,8 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
   }
 
   /** Read `files` in their physical schema and project into the
-    * captured schema — columns paired by stable id (by name against
-    * pre-mapping manifests), missing columns NULL, retypes refused.
+    * captured schema — columns paired by stable id (by name when the
+    * stream captured no mapping), missing columns NULL, retypes refused.
     * `applyDvs` anti-applies the manifest's deletion vectors (the
     * BOOTSTRAP snapshot wants table STATE; change-feed batches
     * deliver appended files as written — see getBatch). `dropDv`
@@ -710,33 +707,36 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
                              extraCol: Option[String] = None,
                              flat: Boolean = false)
       : DataFrame = {
-    val endMap = Snapshots.colMapOf(man)
+    val endMap = man.colMap
     val endSchema = man.schema
-    // captured logical field -> the batch's physical column name
-    def physicalFor(fd: org.apache.spark.sql.types.StructField): Option[String] =
-      capturedMap.find(_.logical.equalsIgnoreCase(fd.name)) match {
-        case Some(cap) if endMap.nonEmpty =>
-          endMap.find(_.id == cap.id).map(_.physical)
+    // captured logical field -> the batch's physical column name. By
+    // stable id, unless the end manifest's ids were synthesized (a
+    // pre-v3 manifest: its ordinal ids are not comparable across
+    // versions) — then by name, trying the captured column's physical
+    // spelling second, the readAligned rule (review r14)
+    def physicalFor(fd: org.apache.spark.sql.types.StructField): Option[String] = {
+      val cap = capturedMap.find(_.logical.equalsIgnoreCase(fd.name))
+      cap match {
+        case Some(c) if !man.syntheticIds => endMap.find(_.id == c.id).map(_.physical)
         case _ =>
-          endMap.find(_.logical.equalsIgnoreCase(fd.name)).map(_.physical)
-            .orElse(Some(fd.name).filter(_ =>
-              endSchema.forall(_.exists(_.name.equalsIgnoreCase(fd.name)))))
+          (fd.name +: cap.map(_.physical).toSeq)
+            .flatMap(n => endMap.find(_.logical.equalsIgnoreCase(n))).headOption
+            .map(_.physical)
       }
+    }
     val pairs = captured.fields.toSeq.map(fd => fd -> physicalFor(fd))
     // retype check through the pairing (same contract as readAligned)
-    endSchema.foreach { es =>
-      pairs.foreach { case (fd, physOpt) =>
-        physOpt.foreach { p =>
-          endMap.find(_.physical == p)
-            .flatMap(c => es.find(_.name.equalsIgnoreCase(c.logical)))
-            .orElse(es.find(_.name.equalsIgnoreCase(fd.name)))
-            .foreach { ef =>
-              require(ef.dataType == fd.dataType,
-                s"stream schema column '${fd.name}' is ${fd.dataType.simpleString} " +
-                  s"but version data has ${ef.dataType.simpleString} — restart " +
-                  "the stream to pick up the retyped schema")
-            }
-        }
+    pairs.foreach { case (fd, physOpt) =>
+      physOpt.foreach { p =>
+        endMap.find(_.physical == p)
+          .flatMap(c => endSchema.find(_.name.equalsIgnoreCase(c.logical)))
+          .orElse(endSchema.find(_.name.equalsIgnoreCase(fd.name)))
+          .foreach { ef =>
+            require(ef.dataType == fd.dataType,
+              s"stream schema column '${fd.name}' is ${fd.dataType.simpleString} " +
+                s"but version data has ${ef.dataType.simpleString} — restart " +
+                "the stream to pick up the retyped schema")
+          }
       }
     }
     val physSchema = StructType(pairs.collect { case (fd, Some(p)) =>

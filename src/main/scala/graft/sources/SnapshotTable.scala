@@ -59,10 +59,9 @@ class SnapshotTable(spark: SparkSession, val dir: String,
     s"snapshot table $dir has no committed versions")
   private val man: Snapshots.Manifest =
     if (pinnedVersion >= 0) Snapshots.manifestAt(dir, pinnedVersion)
-    else Snapshots.Manifest(Seq.empty, userSchema)
-  private val logical: StructType = userSchema.getOrElse(Snapshots.recordedSchema(
-    man, s"version $pinnedVersion of $dir", "commit once to upgrade, or pass .schema(...)"))
-  private val colMap: Seq[Snapshots.ColumnId] = Snapshots.colMapOf(man)
+    else Snapshots.Manifest(Seq.empty, userSchema.get)
+  private val logical: StructType = userSchema.getOrElse(man.schema)
+  private val colMap: Seq[Snapshots.ColumnId] = man.colMap
 
   override def name(): String =
     s"graft-snapshots.`$dir`" + versionAsOf.fold("")(v => s"@v$v")

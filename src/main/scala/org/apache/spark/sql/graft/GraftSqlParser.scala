@@ -284,7 +284,6 @@ case class SnapshotDetailCommand(parts: Seq[String]) extends LeafRunnableCommand
     val v = Snapshots.currentVersion(dir)
     val man = Snapshots.manifestOf(dir, v)
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    // colMap empty = pre-mapping identity (physical == logical)
     val partLogical = man.partitionBy.map(p =>
       man.colMap.find(c => lc(c.physical) == lc(p)).map(_.logical).getOrElse(p))
     val bytes: java.lang.Long =
@@ -300,7 +299,7 @@ case class SnapshotDetailCommand(parts: Seq[String]) extends LeafRunnableCommand
     val committedAt = man.ts
       .map(ms => new java.sql.Timestamp(ms)).orNull
     Seq(Row("graft-snapshots", dir, v, committedAt, man.files.size, bytes,
-      rows, man.schema.map(_.length).getOrElse(0), partLogical,
+      rows, man.schema.length, partLogical,
       man.props, man.dvs.count(_._2.nonEmpty), man.cdf.size))
   }
 }

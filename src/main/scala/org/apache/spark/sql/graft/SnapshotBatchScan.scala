@@ -156,8 +156,7 @@ object SnapshotBatchScan {
             logicalOf: String => String,
             partValuesOf: String => Seq[(String, Option[String])]): SnapshotScan = {
     val cls = spark.asInstanceOf[ClassicSession]
-    val logical = Snapshots.recordedSchema(man, s"snapshot table $dir",
-      "commit once to upgrade before SQL reads")
+    val logical = man.schema
     def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
     val partPhys = man.partitionBy.map(lc).toSet
 

@@ -284,6 +284,71 @@ class SnapshotsSpec extends SparkSpec {
       === Seq(3L))
   }
 
+  test("legacy v1 and v2-era bases serve read's schema on every face") {
+    val base = fresh()
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.base", base)
+    /** A table at `base/name` whose v0 is rewritten into an older
+      * manifest generation: a v1 bare file list, or a v2-era manifest
+      * (schema recorded, no cols=/maxcol=). */
+    def legacy(name: String, v1: Boolean): String = {
+      val dir = s"$base/$name"
+      Snapshots.commit(df(1, 2), dir)
+      val m = java.nio.file.Paths.get(dir).resolve("_v000000.manifest")
+      val body =
+        if (v1) manifestFiles(dir, 0L).mkString("\n") + "\n"
+        else new String(Files.readAllBytes(m)).split("\n").map { l =>
+          if (l.startsWith("#graft-manifest"))
+            l.split("\\s+").filterNot(p =>
+              p.startsWith("cols=") || p.startsWith("maxcol=")).mkString(" ")
+          else l
+        }.mkString("\n")
+      Files.write(m, body.getBytes)
+      Files.deleteIfExists(java.nio.file.Paths.get(dir).resolve("._v000000.manifest.crc"))
+      dir
+    }
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(fd => (fd.name, fd.dataType))
+    def ids(d: org.apache.spark.sql.DataFrame) = d.select("id").as[Long].collect().toSet
+    for ((gen, v1) <- Seq("v1" -> true, "v2" -> false)) {
+      val ro = legacy(s"${gen}ro", v1)
+      val want = Snapshots.read(spark, ro, 0).schema
+      assert(shape(want) === Seq("id" -> org.apache.spark.sql.types.LongType,
+        "payload" -> org.apache.spark.sql.types.StringType), gen)
+      val cf = Snapshots.changeFeed(spark, ro, 0)
+      assert(shape(cf.schema).take(2) === shape(want), gen)
+      assert(ids(cf) === Set(1L, 2L), gen)
+      val sql = spark.sql(s"SELECT * FROM graft.${gen}ro")
+      assert(shape(sql.schema) === shape(want), gen)
+      assert(ids(sql) === Set(1L, 2L), gen)
+      assert(shape(spark.readStream.format("graft-snapshots").load(ro).schema)
+        === shape(want), gen)
+      assert(Snapshots.history(spark, ro).filter(col("version") === 0L)
+        .select("columns").as[Int].head() === 2, gen)
+
+      val rn = legacy(s"${gen}rn", v1)
+      Snapshots.renameColumn(rn, "payload", "body")
+      val renamed = Snapshots.read(spark, rn)
+      assert(shape(renamed.schema) === Seq("id" -> want("id").dataType,
+        "body" -> want("payload").dataType), gen)
+      assert(renamed.select("body").as[String].collect().toSet
+        === Set("row-1", "row-2"), gen)
+
+      val sp = legacy(s"${gen}sp", v1)
+      Snapshots.setTableProperties(sp, Map("owner" -> Some("ingest")))
+      assert(shape(Snapshots.read(spark, sp).schema) === shape(want), gen)
+      assert(Snapshots.currentManifest(sp).props.get("owner") === Some("ingest"), gen)
+
+      val rs = legacy(s"${gen}rs", v1)
+      Snapshots.commitAppend(df(3), rs)
+      Snapshots.restore(rs, 0L)
+      val restored = Snapshots.read(spark, rs)
+      assert(shape(restored.schema) === shape(want), gen)
+      assert(ids(restored) === Set(1L, 2L), gen)
+    }
+  }
+
   test("vacuum under append lineage keeps files a surviving manifest still references") {
     val dir = fresh()
     Snapshots.commit(df(1, 2), dir) // v0

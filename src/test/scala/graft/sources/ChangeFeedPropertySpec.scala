@@ -26,7 +26,9 @@ import graft.operators.Snapshots
   *
   * and both equal, as NET signed multisets (insert/postimage +1,
   * delete/preimage -1), the row diff between the snapshots at a-1 and
-  * head — or else both faces refuse.
+  * head — or else both faces refuse. Vacuums in the history drop
+  * versions below the range start (never inside the range), so both
+  * faces must classify the first version without its predecessor.
   *
   * ScalaCheck with a fixed seed and a bounded case count (the
   * scalatest-scalacheck bridge is not available offline, so the
@@ -55,7 +57,8 @@ class ChangeFeedPropertySpec extends SparkSpec {
       t <- Gen.oneOf(true, false)
     } yield Merge(hit, t)),
     1 -> Gen.choose(1, 3).map(Restore(_)),
-    1 -> Gen.const(Compact))
+    1 -> Gen.const(Compact),
+    3 -> Gen.const(Vacuum))
 
   private val genCase: Gen[Case] = for {
     partitioned <- Gen.oneOf(true, false)
@@ -76,8 +79,11 @@ class ChangeFeedPropertySpec extends SparkSpec {
 
   private def pred(mod: Int, rem: Int) = col("id") % mod === rem
 
-  /** Apply one op; the op index makes appended and merged-in keys fresh. */
-  private def apply(dir: String, op: Op, i: Int): Unit = op match {
+  /** Apply one op; the op index makes appended and merged-in keys
+    * fresh. A vacuum keeps `rangeStart` and records the snapshot of the
+    * predecessor it drops in `gone`, for the row diff. */
+  private def apply(dir: String, op: Op, i: Int, rangeStart: Long,
+                    gone: mutable.Map[Long, Seq[(Long, String)]]): Unit = op match {
     case Append(n) =>
       Snapshots.commitAppend(rows((0 until n).map(k => 100L * (i + 1) + k)), dir)
     case CowDelete(m, r) => Snapshots.deleteWhere(spark, dir, pred(m, r))
@@ -95,8 +101,14 @@ class ChangeFeedPropertySpec extends SparkSpec {
       Snapshots.merge(spark, dir, src, key = "id",
         deleteWhenMatched = Some(col("v") === "dead"))
     case Restore(back) =>
-      Snapshots.restore(dir, math.max(0L, Snapshots.currentVersion(dir) - back))
+      Snapshots.restore(dir, math.max(Snapshots.earliestVersion(dir),
+        Snapshots.currentVersion(dir) - back))
     case Compact => Snapshots.compact(spark, dir)
+    case Vacuum =>
+      val keep = math.min(Snapshots.currentVersion(dir), rangeStart)
+      if (keep >= 1 && Snapshots.versionExists(dir, keep - 1))
+        gone.getOrElseUpdate(keep - 1, snapshot(dir, keep - 1))
+      Snapshots.vacuum(dir, keep)
   }
 
   private type Change = (Long, String, String)
@@ -159,8 +171,9 @@ class ChangeFeedPropertySpec extends SparkSpec {
       if (due && Snapshots.currentVersion(dir) >= planned)
         stream = stream.flatMap(acc =>
           outcome(drain(dir, cp, planned)).map(acc ++ _))
+    val gone = mutable.Map[Long, Seq[(Long, String)]]()
     c.ops.zipWithIndex.foreach { case (op, i) =>
-      apply(dir, op, i)
+      apply(dir, op, i, planned, gone)
       drainIfDue(c.drains(i))
     }
     val head = Snapshots.currentVersion(dir)
@@ -169,7 +182,7 @@ class ChangeFeedPropertySpec extends SparkSpec {
     else stream = outcome(drain(dir, cp, from))
     val batch = outcome(triples(Snapshots.changeFeed(spark, dir, from, Some(head))))
     val diff = counts(snapshot(dir, head).map(_ -> 1) ++
-      snapshot(dir, from - 1).map(_ -> -1))
+      gone.getOrElse(from - 1, snapshot(dir, from - 1)).map(_ -> -1))
     val label = s"range [$from, $head]; batch=$batch; stream=$stream; diff=$diff"
     val agree = (batch, stream) match {
       case (Left(_), Left(_)) => true
@@ -204,6 +217,9 @@ object ChangeFeedPropertySpec {
   final case class Merge(hit: Seq[Long], tombstone: Boolean) extends Op
   final case class Restore(back: Int) extends Op
   case object Compact extends Op
+  /** Vacuum everything below the head or the range start, whichever
+    * is lower. */
+  case object Vacuum extends Op
 
   /** Whether the table is partitioned by g, a history of ops, the
     * range start as an offset back from the planned head (ops that

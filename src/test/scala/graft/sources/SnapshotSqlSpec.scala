@@ -893,7 +893,7 @@ class SnapshotSqlSpec extends SparkSpec {
     }
     assert(e.getMessage != null)
     assert(Snapshots.currentVersion(dir) === 1L &&
-      !Snapshots.manifestAt(dir, 1L).schema.get.fieldNames.contains("c"),
+      !Snapshots.manifestAt(dir, 1L).schema.fieldNames.contains("c"),
       "a refused multi-change ALTER must leave no partial commit")
     // vanilla DESCRIBE on a table literally named 'history' delegates
     // (the unqualified-identifier gate): no interception, real output

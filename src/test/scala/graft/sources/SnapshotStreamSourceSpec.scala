@@ -36,9 +36,10 @@ class SnapshotStreamSourceSpec extends SparkSpec {
     ids.toDF("id").withColumn("payload", concat(lit("p"), col("id")))
 
   /** Run the source with AvailableNow into a collecting foreachBatch;
-    * returns the per-micro-batch row snapshots (id, payload). */
+    * returns the per-micro-batch row snapshots (id, `payload`). */
   private def drain(dir: String, checkpoint: String,
-                    options: Map[String, String] = Map.empty): Seq[Seq[(Long, String)]] = {
+                    options: Map[String, String] = Map.empty,
+                    payload: String = "payload"): Seq[Seq[(Long, String)]] = {
     val batches = mutable.ArrayBuffer[Seq[(Long, String)]]()
     var reader = spark.readStream.format("graft-snapshots")
     options.foreach { case (k, v) => reader = reader.option(k, v) }
@@ -47,7 +48,7 @@ class SnapshotStreamSourceSpec extends SparkSpec {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
-        val rows = b.select("id", "payload").collect()
+        val rows = b.select("id", payload).collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq
         batches.synchronized { batches += rows }
         ()
@@ -333,7 +334,7 @@ class SnapshotStreamSourceSpec extends SparkSpec {
     writeLog("offsets", 0L, "v1\n{}\n{\"version\":1}")
     writeLog("commits", 0L, "v1\n{}")
     def source(ignore: Boolean) = new SnapshotStreamSource(spark, dir,
-      Snapshots.manifestAt(dir, 3L).schema.get, "earliest",
+      Snapshots.manifestAt(dir, 3L).schema, "earliest",
       skipChange = false, ignoreChanges = ignore,
       metadataPath = Some(cpRoot + "/sources/0"))
     import SnapshotStreamSource.SnapshotSourceOffset
@@ -622,5 +623,53 @@ class SnapshotStreamSourceSpec extends SparkSpec {
     val inc = drain(dir, cp)
     assert(inc.flatten === Seq((2L, "p2")),
       "a stream fixed on the captured schema sees appended rows without the new column")
+  }
+
+  test("legacy (v1 and v2-era) versions pair by name: synthesized ids never route another column's data") {
+    /** Rewrite version `v`'s manifest into an older generation: a v1
+      * bare file list, or a v2-era manifest (no cols=/maxcol=). */
+    def downgrade(dir: String, v: Long, v1: Boolean): Unit = {
+      val m = java.nio.file.Paths.get(dir).resolve(f"_v$v%06d.manifest")
+      val body =
+        if (v1) Snapshots.manifestAt(dir, v).files.mkString("\n") + "\n"
+        else new String(Files.readAllBytes(m)).split("\n").map { l =>
+          if (l.startsWith("#graft-manifest"))
+            l.split("\\s+").filterNot(p =>
+              p.startsWith("cols=") || p.startsWith("maxcol=")).mkString(" ")
+          else l
+        }.mkString("\n")
+      Files.write(m, body.getBytes)
+      Files.deleteIfExists(java.nio.file.Paths.get(dir).resolve(f"._v$v%06d.manifest.crc"))
+    }
+    for ((gen, v1) <- Seq("v1" -> true, "v2" -> false)) {
+      val dir = fresh()
+      Snapshots.commit(df(1, 2).withColumn("other", concat(lit("o"), col("id")))
+        .select("id", "other", "payload").coalesce(1), dir) // v0
+      Snapshots.commit(Seq(9L).toDF("id").withColumn("payload", lit("p9"))
+        .coalesce(1), dir) // v1: a full rewrite that drops 'other'
+      downgrade(dir, 0L, v1)
+      downgrade(dir, 1L, v1)
+      // v2 continues v1's synthesized mapping, so its 'payload' id is
+      // v0's ordinal id of 'other'
+      Snapshots.commitAppend(df(3).coalesce(1), dir)
+      val got = drain(dir, fresh(), Map("startingVersion" -> "0",
+        "skipChangeCommits" -> "true", "maxFilesPerTrigger" -> "1"))
+      assert(got.flatten.sorted === Seq((1L, "p1"), (2L, "p2"), (3L, "p3")), gen)
+      assert(Snapshots.readAligned(spark, dir, 0L).select("id", "payload")
+        .as[(Long, String)].collect().sorted.toSeq === Seq((1L, "p1"), (2L, "p2")), gen)
+      // renamed after a legacy version: the name arm finds that
+      // version's data under the column's physical (first) spelling
+      // (v1 holds a file so that v0 ends a batch on its own)
+      val rn = fresh()
+      Snapshots.commit(df(1).coalesce(1), rn) // v0
+      Snapshots.commitAppend(df(2).coalesce(1), rn) // v1
+      downgrade(rn, 0L, v1)
+      Snapshots.renameColumn(rn, "payload", "body") // v2
+      Snapshots.commitAppend(Seq(3L).toDF("id").withColumn("body", lit("p3"))
+        .coalesce(1), rn) // v3
+      val renamed = drain(rn, fresh(), Map("startingVersion" -> "0",
+        "maxFilesPerTrigger" -> "1"), payload = "body")
+      assert(renamed.flatten.sorted === Seq((1L, "p1"), (2L, "p2"), (3L, "p3")), gen)
+    }
   }
 }
