@@ -466,7 +466,8 @@ object Snapshots {
       // manifest bytes instead of O(table files); a metadata-only
       // rename commits O(1). `depth=` counts delta hops to the nearest
       // FULL manifest (a checkpoint): writers cut a full manifest when
-      // the chain would exceed [[DeltaChainLimit]], bounding fold cost.
+      // the chain would exceed the cap (see [[publishNext]]), bounding
+      // fold cost.
       val base = headerParts
         .collectFirst { case s if s.startsWith("base=") =>
           s.stripPrefix("base=").toLong }
@@ -710,16 +711,7 @@ object Snapshots {
       case (acc, (k, Some(x))) => acc + (k -> x)
       case (acc, (k, None)) => acc - k
     }
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
-        prev.schema, prev.colMap, Map.empty, Map.empty, prev.maxColId, txn = None,
-        retired = prev.retired, partitionBy = prev.partitionBy,
-        op = "set-property", props = props)
-    else
-      publish(f, root, v, prev.files, prev.schema, prev.colMap, prev.stats,
-        prev.maxColId, txn = None, retired = prev.retired, sizes = prev.sizes,
-        partitionBy = prev.partitionBy, op = "set-property", dvs = prev.dvs,
-        props = props)
+    publishNext(f, root, v, prev)("set-property", props = props)
     v
   }
 
@@ -982,11 +974,12 @@ object Snapshots {
 
   /** The header line every manifest (full or delta) shares — ONE
     * builder so a future field can never fork the format between the
-    * two writers (review r15). `props` is REQUIRED (no default) all
-    * the way down from publish/publishDelta: every commit site must
-    * consciously carry the previous version's properties forward — a
-    * defaulted parameter would let one forgotten site silently drop
-    * `changeFeed=true` and stop CDF recording without an error. */
+    * two writers (review r15). `props` has no default here or in
+    * [[publish]]: a full-base commit must consciously carry the
+    * previous version's properties forward, since a forgotten one
+    * would silently drop `changeFeed=true` and stop CDF recording
+    * without an error. Successor commits ([[publishNext]]) carry
+    * `prev`'s properties by construction. */
   private def headerFor(schema: StructType, colMap: Seq[ColumnId],
                         maxColId: Int, txn: Option[(String, Long)],
                         retired: Seq[String], partitionBy: Seq[String],
@@ -1055,41 +1048,56 @@ object Snapshots {
     * fold cost of any read and how long vacuum must retain demoted
     * base manifests. 20 mirrors Delta's every-10-commits checkpoint
     * order of magnitude. */
-  private val DeltaChainLimit = 20
+  private[graft] val DeltaChainLimit = 20
 
-  /** May the next commit extend `prev`'s delta chain? */
-  private def deltaOk(prev: Manifest): Boolean = prev.depth < DeltaChainLimit
-
-  /** Publish version `v` as a DELTA manifest: `adds`/`removes` are
-    * actions relative to version `baseV`'s folded state; header
-    * fields carry the version's full current truth (schema, mapping,
-    * txn, partitioning), so only the FILE LIST is incremental. Stats
-    * and sizes are recorded for the added files only. */
-  private def publishDelta(f: FileSystem, root: Path, v: Long,
-                           baseV: Long, depth: Int,
-                           adds: Seq[String], removes: Seq[String],
-                           schema: StructType, colMap: Seq[ColumnId],
-                           stats: Map[String, SnapshotStats.FileStats],
-                           sizes: Map[String, Long],
-                           maxColId: Int, txn: Option[(String, Long)],
-                           retired: Seq[String], partitionBy: Seq[String],
-                           op: String = "",
-                           dvs: Map[String, Vector[Long]] = Map.empty,
-                           props: Map[String, String],
-                           cdf: Seq[String] = Seq.empty,
-                           cdfComplete: Boolean = false): Unit = {
-    val header = headerFor(schema, colMap, maxColId, txn, retired, partitionBy,
-      op, props) + s" base=$baseV depth=$depth"
-    val removeLines = removes.map(r => s"#remove $r")
-    // delta #dv lines annotate CARRIED files — they bypass the
-    // files-subset gate dvLines applies for full manifests
-    val dvAdd = dvs.iterator.collect { case (rel, pos) if pos.nonEmpty =>
-      encodeDvLine(rel, pos) }.toSeq.sorted
-    val body = ((header +: adds) ++ removeLines ++ fileLines(adds, stats, sizes) ++
-      dvAdd ++ cdfLines(cdf, cdfComplete) :+
-      s"#end ${adds.length}").mkString("\n")
-    writeManifestAtomic(f, root, v, manifestPath(root, v), body)
-  }
+  /** Publish version `v` as the SUCCESSOR of `prev` (version `v - 1`;
+    * the empty manifest when `v` is 0) — the one writer of every
+    * commit that edits its predecessor's file list instead of
+    * replacing it ([[publish]] writes the full-base commits). `adds`
+    * are the version's own new files with their `stats`/`sizes`,
+    * `removes` the predecessor files it drops, `dvs` the full
+    * position union of every file whose deletion vector it sets.
+    * Header fields default to `prev`'s, except `txn`: only a stream
+    * append records one.
+    *
+    * The version is a DELTA manifest (actions relative to `v - 1`,
+    * headers the version's full current truth) until the chain reaches
+    * [[DeltaChainLimit]], then a full checkpoint of the same content —
+    * `prev`'s files minus `removes` plus `adds`, and stats, sizes and
+    * DVs by the same rule, exactly what [[parseManifest]]'s fold
+    * derives from the delta. */
+  private def publishNext(f: FileSystem, root: Path, v: Long, prev: Manifest)(
+      op: String,
+      adds: Seq[String] = Seq.empty,
+      removes: Seq[String] = Seq.empty,
+      stats: Map[String, SnapshotStats.FileStats] = Map.empty,
+      sizes: Map[String, Long] = Map.empty,
+      dvs: Map[String, Vector[Long]] = Map.empty,
+      cdf: Seq[String] = Seq.empty,
+      cdfComplete: Boolean = false,
+      schema: StructType = prev.schema,
+      colMap: Seq[ColumnId] = prev.colMap,
+      txn: Option[(String, Long)] = None,
+      retired: Seq[String] = prev.retired,
+      props: Map[String, String] = prev.props): Unit =
+    if (v > 0 && prev.depth < DeltaChainLimit) {
+      val header = headerFor(schema, colMap, prev.maxColId, txn, retired,
+        prev.partitionBy, op, props) + s" base=${v - 1} depth=${prev.depth + 1}"
+      // delta #dv lines annotate CARRIED files — they bypass the
+      // files-subset gate dvLines applies for full manifests
+      val dvAdd = dvs.iterator.collect { case (rel, pos) if pos.nonEmpty =>
+        encodeDvLine(rel, pos) }.toSeq.sorted
+      val body = ((header +: adds) ++ removes.map(r => s"#remove $r") ++
+        fileLines(adds, stats, sizes) ++ dvAdd ++ cdfLines(cdf, cdfComplete) :+
+        s"#end ${adds.length}").mkString("\n")
+      writeManifestAtomic(f, root, v, manifestPath(root, v), body)
+    } else {
+      val gone = removes.toSet
+      publish(f, root, v, prev.files.filterNot(gone) ++ adds, schema, colMap,
+        (prev.stats -- removes) ++ stats, prev.maxColId, txn, retired,
+        (prev.sizes -- removes) ++ sizes, prev.partitionBy, op,
+        (prev.dvs -- removes) ++ dvs, props, cdf, cdfComplete)
+    }
 
   /** OBJECT-STORE-SAFE COMMIT PROTOCOL (r18, judge r17 #5): the ONE
     * point every manifest publish routes through. The default
@@ -1659,17 +1667,11 @@ object Snapshots {
         // growth bound (judge r14 #6): an append publishes a DELTA
         // manifest of O(its own files), not O(table files) — until the
         // chain cap forces a full checkpoint manifest
-        val opLabel = if (txn.isDefined) "stream-append" else "append"
         try {
-          if (v > 0 && deltaOk(prev))
-            publishDelta(f, root, v, v - 1, prev.depth + 1, w.files, Seq.empty,
-              schema, map, w.stats, w.sizes, prev.maxColId, txn, retired,
-              prev.partitionBy, op = opLabel, props = prev.props)
-          else
-            publish(f, root, v, prev.files ++ w.files, schema, map,
-              prev.stats ++ w.stats, prev.maxColId, txn, retired,
-              prev.sizes ++ w.sizes, prev.partitionBy, op = opLabel,
-              dvs = prev.dvs, props = prev.props)
+          publishNext(f, root, v, prev)(
+            if (txn.isDefined) "stream-append" else "append",
+            adds = w.files, stats = w.stats, sizes = w.sizes,
+            schema = schema, colMap = map, txn = txn, retired = retired)
           result = v
         } catch {
           case e: IllegalStateException
@@ -1973,61 +1975,11 @@ object Snapshots {
     * into the renamed column because reads resolve the column by its
     * PHYSICAL name, and [[readAligned]] matches versions by column ID
     * — so the rename is visible across time travel without rewriting
-    * a byte of data. */
+    * a byte of data. As a delta it commits O(1) manifest bytes — the
+    * file list never leaves the base (judge r14 #6's rename case). */
   def renameColumn(dir: String, from: String, to: String,
-                   expectedVersion: Option[Long] = None): Long = {
-    val f = fsFor(dir)
-    val root = rootOf(f, dir)
-    val v = nextVersion(dir, expectedVersion)
-    require(v > 0, s"cannot rename a column of an empty table $dir")
-    val prev = readManifest(f, root, v - 1)
-    val schema = prev.schema
-    val idx = schema.fields.indexWhere(fd => sameCol(fd.name, from))
-    require(idx >= 0, s"no column '$from' in $dir (have: ${schema.fieldNames.mkString(", ")})")
-    require(!schema.fields.zipWithIndex.exists { case (fd, i) =>
-      i != idx && sameCol(fd.name, to) },
-      s"cannot rename '$from' to '$to': a column '$to' already exists")
-    val newSchema = StructType(schema.fields.updated(idx, schema.fields(idx).copy(name = to)))
-    val map = prev.colMap.map(c =>
-      if (sameCol(c.logical, from)) c.copy(logical = to) else c)
-    // metadata-only: as a delta this commits O(1) manifest bytes — the
-    // file list never leaves the base (judge r14 #6's rename case)
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
-        newSchema, map, Map.empty, Map.empty, prev.maxColId, txn = None,
-        retired = prev.retired, partitionBy = prev.partitionBy, op = "rename",
-        props = prev.props)
-    else
-      publish(f, root, v, prev.files, newSchema, map, prev.stats, prev.maxColId,
-        txn = None, retired = prev.retired, sizes = prev.sizes,
-        partitionBy = prev.partitionBy, op = "rename", dvs = prev.dvs,
-        props = prev.props)
-    v
-  }
-
-  /** Shared body of the two metadata-only schema commits below: same
-    * files, same stats, new schema + mapping, O(1) delta bytes. */
-  private def publishSchemaChange(dir: String, op: String,
-                                  expectedVersion: Option[Long])(
-      change: (StructType, Manifest) => (StructType, Seq[ColumnId])): Long = {
-    val f = fsFor(dir)
-    val root = rootOf(f, dir)
-    val v = nextVersion(dir, expectedVersion)
-    require(v > 0, s"cannot $op on an empty table $dir")
-    val prev = readManifest(f, root, v - 1)
-    val (newSchema, map) = change(prev.schema, prev)
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
-        newSchema, map, Map.empty, Map.empty, prev.maxColId, txn = None,
-        retired = prev.retired, partitionBy = prev.partitionBy, op = op,
-        props = prev.props)
-    else
-      publish(f, root, v, prev.files, newSchema, map, prev.stats, prev.maxColId,
-        txn = None, retired = prev.retired, sizes = prev.sizes,
-        partitionBy = prev.partitionBy, op = op, dvs = prev.dvs,
-        props = prev.props)
-    v
-  }
+                   expectedVersion: Option[Long] = None): Long =
+    alterTable(dir, Seq(SchemaChange.RenameColumn(from, to)), expectedVersion)
 
   /** One supported schema change — the [[alterTable]] vocabulary. */
   sealed trait SchemaChange
@@ -2041,7 +1993,8 @@ object Snapshots {
   }
 
   /** Apply a SEQUENCE of schema changes as ONE metadata-only commit
-    * (r17): a multi-change `ALTER TABLE` either lands whole or not at
+    * (r17): same files, same stats, new schema + mapping, O(1) delta
+    * bytes. A multi-change `ALTER TABLE` either lands whole or not at
     * all — per-change commits would leave the table half-altered when
     * a later change fails validation or loses the version race
     * (review r17). Validation runs over the folded intermediate
@@ -2057,8 +2010,13 @@ object Snapshots {
       case Seq(_: SchemaChange.WidenColumn) => "widen"
       case _ => "alter"
     }
-    publishSchemaChange(dir, opLabel, expectedVersion) { (schema0, prev) =>
-      changes.foldLeft((schema0, prev.colMap)) { case ((schema, map), c) =>
+    val f = fsFor(dir)
+    val root = rootOf(f, dir)
+    val v = nextVersion(dir, expectedVersion)
+    require(v > 0, s"cannot $opLabel on an empty table $dir")
+    val prev = readManifest(f, root, v - 1)
+    val (newSchema, map) =
+      changes.foldLeft((prev.schema, prev.colMap)) { case ((schema, map), c) =>
         c match {
           case SchemaChange.AddColumn(name, dt) =>
             require(!schema.fields.exists(fd => sameCol(fd.name, name)),
@@ -2090,7 +2048,8 @@ object Snapshots {
               schema.fields(idx).copy(dataType = to))), map)
         }
       }
-    }
+    publishNext(f, root, v, prev)(opLabel, schema = newSchema, colMap = map)
+    v
   }
 
   /** ADD COLUMN as a METADATA-ONLY commit (r17, judge r16 #5): the new
@@ -2501,8 +2460,8 @@ object Snapshots {
           prev.colMap.find(c => lc(c.physical) == lc(p)).map(c => lc(c.logical))).toSet
         if (predicateCols(pred).forall(partLogical.contains))
           // hand over the manifest this gate already resolved (a
-          // delta fold is up to DeltaChainLimit manifest GETs — don't
-          // pay it twice per delete, review r15)
+          // delta fold reads one manifest per chain link — don't pay
+          // it twice per delete, review r15)
           return partitionDelete(spark, dir, pred, expectedVersion, cur, prev)
       }
     }
@@ -2586,16 +2545,7 @@ object Snapshots {
         rel -> (prev.dvs.getOrElse(rel, Vector.empty) ++ r.getSeq[Long](1))
           .distinct.sorted.toVector
       }.toMap
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty, Seq.empty,
-        schema, map, Map.empty, Map.empty, prev.maxColId, txn = None,
-        retired = prev.retired, partitionBy = prev.partitionBy,
-        op = "delete", dvs = newDvs, props = prev.props)
-    else
-      publish(f, root, v, prev.files, schema, map, prev.stats, prev.maxColId,
-        txn = None, retired = prev.retired, sizes = prev.sizes,
-        partitionBy = prev.partitionBy, op = "delete",
-        dvs = prev.dvs ++ newDvs, props = prev.props)
+    publishNext(f, root, v, prev)("delete", dvs = newDvs)
     v
   }
 
@@ -2667,17 +2617,7 @@ object Snapshots {
     val doomedFiles = tuples.zipWithIndex
       .collect { case (t, i) if doomedIdx(i) => byTuple(t) }
       .flatten.toSet
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, Seq.empty,
-        prev.files.filter(doomedFiles), schema, map, Map.empty, Map.empty,
-        prev.maxColId, txn = None, retired = prev.retired,
-        partitionBy = prev.partitionBy, op = "delete", props = prev.props)
-    else
-      publish(f, root, v, prev.files.filterNot(doomedFiles), schema, map,
-        prev.stats -- doomedFiles, prev.maxColId, txn = None,
-        retired = prev.retired, sizes = prev.sizes -- doomedFiles,
-        partitionBy = prev.partitionBy, op = "delete",
-        dvs = prev.dvs -- doomedFiles, props = prev.props)
+    publishNext(f, root, v, prev)("delete", removes = prev.files.filter(doomedFiles))
     v
   }
 
@@ -2796,64 +2736,41 @@ object Snapshots {
         case _ => Some(lit(true) === lit(true)) // unprunable type: all files may match
       }
       val touched = rangePred.fold(Seq.empty[String])(pruneFiles(prev, _))
-      val untouched = {
-        val t = touched.toSet
-        prev.files.filterNot(t)
-      }
       val keys = src.select(quoted(keyName).as(keyName)).distinct()
       val keySide = if (keys.count() <= maxBroadcastKeys) broadcast(keys) else keys
-      val map = prev.colMap
-      val slice = readManifested(spark, root, prev.copy(files = touched), None)
-      val survivors = slice.join(keySide, Seq(keyName), "left_anti")
-      val incoming0 = deleteWhenMatched.fold(src)(c =>
-        src.filter(!coalesce(c, lit(false))))
-      val incoming =
-        if (insertNotMatched) incoming0
-        else incoming0.join(slice.select(quoted(keyName)), Seq(keyName), "left_semi")
-      val out = survivors.unionByName(incoming)
-      val (files, stats, sizes) = writeWithStats(out, map, f, root, v,
-        partByPhys = prev.partitionBy)
-      // change-data recording (r18): tombstoned target rows 'delete',
-      // replaced rows as pre/post-images, new keys 'insert' — each set
-      // derived with the same key-join semantics the merge itself used
-      // (NULL keys never match: NULL-key target rows appear in no
-      // change set, NULL-key source rows only as inserts)
-      val withCdf = cdfEnabled(prev)
-      val cdf = if (!withCdf) Seq.empty else {
-        val sliceKeys = slice.select(quoted(keyName))
-        val delPre = deleteWhenMatched.map { c =>
-          slice.join(src.filter(coalesce(c, lit(false))).select(quoted(keyName)),
-              Seq(keyName), "left_semi")
-            .withColumn(ChangeTypeCol, lit("delete"))
-        }
-        val replPre = slice
-          .join(incoming0.select(quoted(keyName)), Seq(keyName), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val replPost = incoming0
-          .join(sliceKeys, Seq(keyName), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val ins =
-          if (insertNotMatched)
-            Some(incoming0.join(sliceKeys, Seq(keyName), "left_anti")
-              .withColumn(ChangeTypeCol, lit("insert")))
-          else None
-        val changes = (delPre.toSeq ++ Seq(replPre, replPost) ++ ins.toSeq)
-          .reduce(_.unionByName(_))
-        writeChangeData(changes, map, f, root, v)
+      rewriteSlice(spark, f, root, v, prev, touched, "merge") { slice =>
+        val survivors = slice.join(keySide, Seq(keyName), "left_anti")
+        val incoming0 = deleteWhenMatched.fold(src)(c =>
+          src.filter(!coalesce(c, lit(false))))
+        val incoming =
+          if (insertNotMatched) incoming0
+          else incoming0.join(slice.select(quoted(keyName)), Seq(keyName), "left_semi")
+        // change-data recording (r18): tombstoned target rows 'delete',
+        // replaced rows as pre/post-images, new keys 'insert' — each set
+        // derived with the same key-join semantics the merge itself used
+        // (NULL keys never match: NULL-key target rows appear in no
+        // change set, NULL-key source rows only as inserts)
+        (survivors.unionByName(incoming), () => {
+          val sliceKeys = slice.select(quoted(keyName))
+          val delPre = deleteWhenMatched.map { c =>
+            slice.join(src.filter(coalesce(c, lit(false))).select(quoted(keyName)),
+                Seq(keyName), "left_semi")
+              .withColumn(ChangeTypeCol, lit("delete"))
+          }
+          val replPre = slice
+            .join(incoming0.select(quoted(keyName)), Seq(keyName), "left_semi")
+            .withColumn(ChangeTypeCol, lit("update_preimage"))
+          val replPost = incoming0
+            .join(sliceKeys, Seq(keyName), "left_semi")
+            .withColumn(ChangeTypeCol, lit("update_postimage"))
+          val ins =
+            if (insertNotMatched)
+              Some(incoming0.join(sliceKeys, Seq(keyName), "left_anti")
+                .withColumn(ChangeTypeCol, lit("insert")))
+            else None
+          (delPre.toSeq ++ Seq(replPre, replPost) ++ ins.toSeq).reduce(_.unionByName(_))
+        })
       }
-      if (deltaOk(prev))
-        publishDelta(f, root, v, v - 1, prev.depth + 1, files, touched,
-          schema, map, stats, sizes, prev.maxColId, txn = None,
-          retired = prev.retired, partitionBy = prev.partitionBy, op = "merge",
-          props = prev.props, cdf = cdf, cdfComplete = withCdf)
-      else
-        publish(f, root, v, untouched ++ files, schema, map,
-          (prev.stats -- touched) ++ stats, prev.maxColId, txn = None,
-          retired = prev.retired, sizes = (prev.sizes -- touched) ++ sizes,
-          partitionBy = prev.partitionBy, op = "merge",
-          dvs = prev.dvs -- touched, props = prev.props,
-          cdf = cdf, cdfComplete = withCdf)
-      v
     } finally src.unpersist(blocking = false)
   }
 
@@ -2911,7 +2828,6 @@ object Snapshots {
     require(v > 0, s"no committed version in $dir — commit a base before merging")
     val prev = readManifest(f, root, v - 1)
     val schema = prev.schema
-    val map = prev.colMap
     val keyFields = keys.map { k =>
       schema.find(fd => sameCol(fd.name, k)).getOrElse(
         throw new IllegalArgumentException(
@@ -2979,109 +2895,80 @@ object Snapshots {
             pruneFiles(prev, pred)
           }
         }
-      val untouched = {
-        val t = touched.toSet
-        prev.files.filterNot(t)
-      }
-      val slice = readManifested(spark, root, prev.copy(files = touched), None)
-      val matchMarker = "__graft_merge_matched"
-      val srcSide0 = src.withColumn(matchMarker, lit(true))
-      val srcSide =
-        (if (src.count() <= maxBroadcastRows) broadcast(srcSide0) else srcSide0)
-          .alias("s")
-      def tq(n: String) = col("t.`" + n.replace("`", "``") + "`")
-      def sq(n: String) = col("s.`" + n.replace("`", "``") + "`")
-      val joinCond = keyFields.map(kf => tq(kf.name) === sq(kf.name)).reduce(_ && _)
-      val joined = slice.alias("t").join(srcSide, joinCond, "left_outer")
-      val matched = col(matchMarker).isNotNull
-      val delGate = deleteCondition
-        .map(c => matched && coalesce(c, lit(false))).getOrElse(lit(false))
-      val updGate = matched && !delGate &&
-        coalesce(updateCondition.getOrElse(lit(true)), lit(false))
-      val kept = joined.filter(!delGate).select(schema.fields.toSeq.map { fd =>
-        updateSet.flatMap(_.find { case (n, _) => sameCol(n, fd.name) }) match {
-          // no cast: a wrong-typed assignment must hit the schema
-          // check below, never be silently coerced (updateWhere rule)
-          case Some((_, expr)) => when(updGate, expr).otherwise(tq(fd.name)).as(fd.name)
-          case None => tq(fd.name).as(fd.name)
-        }
-      }: _*)
-      val inserts: Option[DataFrame] = insertCols.map { cols =>
-        val notMatched = src.alias("s")
-          .join(slice.select(keyFields.map(kf => quoted(kf.name)): _*).alias("t"),
-            joinCond, "left_anti")
-        val gated = insertCondition.fold(notMatched)(c =>
-          notMatched.filter(coalesce(c, lit(false))))
-        gated.select(schema.fields.toSeq.map { fd =>
-          cols.find { case (n, _) => sameCol(n, fd.name) } match {
-            case Some((_, expr)) => expr.as(fd.name)
-            case None => lit(null).cast(fd.dataType).as(fd.name)
-          }
-        }: _*)
-      }
-      val out = inserts.fold(kept)(kept.unionByName)
-      def lcRoot(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-      require(out.schema.fields.map(fd => (lcRoot(fd.name), fd.dataType)).toSeq
-        == schema.fields.map(fd => (lcRoot(fd.name), fd.dataType)).toSeq,
-        "mergeInto assignments must preserve the table schema — cast the " +
-          "expressions to the column types")
-      val (files, stats, sizes) = writeWithStats(out, map, f, root, v,
-        partByPhys = prev.partitionBy)
-      // change-data recording (r18): derived from the SAME joined
-      // frame the merge evaluated — deleted pairs' target rows,
-      // updated pairs' pre/post-images, and the insert projection
-      val withCdf = cdfEnabled(prev)
-      val cdf = if (!withCdf) Seq.empty else {
-        val tRow = schema.fields.toSeq.map(fd => tq(fd.name).as(fd.name))
-        val postRow = schema.fields.toSeq.map { fd =>
+      rewriteSlice(spark, f, root, v, prev, touched, "merge") { slice =>
+        val matchMarker = "__graft_merge_matched"
+        val srcSide0 = src.withColumn(matchMarker, lit(true))
+        val srcSide =
+          (if (src.count() <= maxBroadcastRows) broadcast(srcSide0) else srcSide0)
+            .alias("s")
+        def tq(n: String) = col("t.`" + n.replace("`", "``") + "`")
+        def sq(n: String) = col("s.`" + n.replace("`", "``") + "`")
+        val joinCond = keyFields.map(kf => tq(kf.name) === sq(kf.name)).reduce(_ && _)
+        val joined = slice.alias("t").join(srcSide, joinCond, "left_outer")
+        val matched = col(matchMarker).isNotNull
+        val delGate = deleteCondition
+          .map(c => matched && coalesce(c, lit(false))).getOrElse(lit(false))
+        val updGate = matched && !delGate &&
+          coalesce(updateCondition.getOrElse(lit(true)), lit(false))
+        val kept = joined.filter(!delGate).select(schema.fields.toSeq.map { fd =>
           updateSet.flatMap(_.find { case (n, _) => sameCol(n, fd.name) }) match {
-            case Some((_, expr)) => expr.as(fd.name)
+            // no cast: a wrong-typed assignment must hit the schema
+            // check in rewriteSlice, never be silently coerced
+            case Some((_, expr)) => when(updGate, expr).otherwise(tq(fd.name)).as(fd.name)
             case None => tq(fd.name).as(fd.name)
           }
+        }: _*)
+        val inserts: Option[DataFrame] = insertCols.map { cols =>
+          val notMatched = src.alias("s")
+            .join(slice.select(keyFields.map(kf => quoted(kf.name)): _*).alias("t"),
+              joinCond, "left_anti")
+          val gated = insertCondition.fold(notMatched)(c =>
+            notMatched.filter(coalesce(c, lit(false))))
+          gated.select(schema.fields.toSeq.map { fd =>
+            cols.find { case (n, _) => sameCol(n, fd.name) } match {
+              case Some((_, expr)) => expr.as(fd.name)
+              case None => lit(null).cast(fd.dataType).as(fd.name)
+            }
+          }: _*)
         }
-        val delPre = deleteCondition.map(_ =>
-          joined.filter(delGate).select(tRow: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-        val updPair = updateSet.map { _ =>
-          joined.filter(updGate).select(tRow: _*)
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(joined.filter(updGate).select(postRow: _*)
-              .withColumn(ChangeTypeCol, lit("update_postimage")))
-        }
-        val ins = inserts.map(_.withColumn(ChangeTypeCol, lit("insert")))
-        val changes = (delPre.toSeq ++ updPair.toSeq ++ ins.toSeq)
-          .reduce(_.unionByName(_))
-        writeChangeData(changes, map, f, root, v)
+        // change-data recording (r18): derived from the SAME joined
+        // frame the merge evaluated — deleted pairs' target rows,
+        // updated pairs' pre/post-images, and the insert projection
+        (inserts.fold(kept)(kept.unionByName), () => {
+          val tRow = schema.fields.toSeq.map(fd => tq(fd.name).as(fd.name))
+          val postRow = schema.fields.toSeq.map { fd =>
+            updateSet.flatMap(_.find { case (n, _) => sameCol(n, fd.name) }) match {
+              case Some((_, expr)) => expr.as(fd.name)
+              case None => tq(fd.name).as(fd.name)
+            }
+          }
+          val delPre = deleteCondition.map(_ =>
+            joined.filter(delGate).select(tRow: _*)
+              .withColumn(ChangeTypeCol, lit("delete")))
+          val updPair = updateSet.map { _ =>
+            joined.filter(updGate).select(tRow: _*)
+              .withColumn(ChangeTypeCol, lit("update_preimage"))
+              .unionByName(joined.filter(updGate).select(postRow: _*)
+                .withColumn(ChangeTypeCol, lit("update_postimage")))
+          }
+          val ins = inserts.map(_.withColumn(ChangeTypeCol, lit("insert")))
+          (delPre.toSeq ++ updPair.toSeq ++ ins.toSeq).reduce(_.unionByName(_))
+        })
       }
-      if (deltaOk(prev))
-        publishDelta(f, root, v, v - 1, prev.depth + 1, files, touched,
-          schema, map, stats, sizes, prev.maxColId, txn = None,
-          retired = prev.retired, partitionBy = prev.partitionBy, op = "merge",
-          props = prev.props, cdf = cdf, cdfComplete = withCdf)
-      else
-        publish(f, root, v, untouched ++ files, schema, map,
-          (prev.stats -- touched) ++ stats, prev.maxColId, txn = None,
-          retired = prev.retired, sizes = (prev.sizes -- touched) ++ sizes,
-          partitionBy = prev.partitionBy, op = "merge",
-          dvs = prev.dvs -- touched, props = prev.props,
-          cdf = cdf, cdfComplete = withCdf)
-      v
     } finally src.unpersist(blocking = false)
   }
 
-  /** Shared COW core: split the current version's files by the stats
-    * pruner into (touched, untouched), rewrite the touched slice
-    * through `transform`, publish untouched-by-reference + rewritten.
+  /** Shared COW core of delete and update: split the current
+    * version's files by the stats pruner into (touched, untouched) and
+    * rewrite the touched slice through `transform` ([[rewriteSlice]]).
     * `changeRows` (given the same slice) yields the commit's row-level
-    * change set — computed and written as `_change_data` parquet ONLY
-    * when the table records a change feed ([[ChangeFeedProp]]); the
-    * commit is then marked CDF-complete. */
+    * change set. */
   private def rewriteWhere(spark: SparkSession, dir: String,
                            pred: org.apache.spark.sql.Column,
                            expectedVersion: Option[Long],
                            op: String)(
       transform: DataFrame => DataFrame,
-      changeRows: DataFrame => DataFrame = null): Long = {
+      changeRows: DataFrame => DataFrame): Long = {
     val f = fsFor(dir)
     val root = rootOf(f, dir)
     val v = nextVersion(dir, expectedVersion)
@@ -3089,39 +2976,39 @@ object Snapshots {
     val prev = readManifest(f, root, v - 1)
     val touched = pruneFiles(prev, pred)
     if (touched.isEmpty) return v - 1 // provably nothing to do
-    val untouchedFiles = {
-      val t = touched.toSet
-      prev.files.filterNot(t)
-    }
-    val schema = prev.schema
-    val map = prev.colMap
+    rewriteSlice(spark, f, root, v, prev, touched, op)(slice =>
+      (transform(slice), () => changeRows(slice)))
+  }
+
+  /** The copy-on-write tail of [[rewriteWhere]], [[merge]] and
+    * [[mergeInto]]: read `prev`'s `touched` files as one slice, turn
+    * it into the rewritten rows and (lazily) the row-level change set,
+    * write the rows, and publish version `v` as untouched files by
+    * reference plus the rewritten ones. The change set is written as
+    * `_change_data` parquet ONLY when the table records a change feed
+    * ([[ChangeFeedProp]]); the commit is then marked CDF-complete. */
+  private def rewriteSlice(spark: SparkSession, f: FileSystem, root: Path, v: Long,
+                           prev: Manifest, touched: Seq[String], op: String)(
+      rewrite: DataFrame => (DataFrame, () => DataFrame)): Long = {
     val slice = readManifested(spark, root, prev.copy(files = touched), None)
-    val rewritten = transform(slice)
-    // Locale.ROOT, matching sameCol semantics everywhere else in the
-    // file — default-locale toLowerCase would spuriously fail (or
-    // mis-pass) the COW schema check on e.g. a Turkish-locale JVM for
-    // columns containing 'I' (advisor r14)
-    def lcRoot(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    require(rewritten.schema.fields.map(fd => (lcRoot(fd.name), fd.dataType)).toSeq
-      == schema.fields.map(fd => (lcRoot(fd.name), fd.dataType)).toSeq,
-      "copy-on-write rewrite must preserve the table schema")
-    val (files, stats, sizes) = writeWithStats(rewritten, map, f, root, v,
+    val (rewritten, changeRows) = rewrite(slice)
+    // by name, in any order (files are written and read by name; a
+    // keyed anti-join puts the key first). Locale.ROOT, matching
+    // sameCol semantics everywhere else in the file — default-locale
+    // toLowerCase would spuriously fail (or mis-pass) the check on
+    // e.g. a Turkish-locale JVM for columns containing 'I' (advisor r14)
+    def shape(st: StructType) =
+      st.fields.map(fd => (fd.name.toLowerCase(java.util.Locale.ROOT), fd.dataType)).toSeq
+    require(shape(rewritten.schema).sortBy(_._1) == shape(prev.schema).sortBy(_._1),
+      "copy-on-write rewrite must preserve the table schema — cast assigned " +
+        "expressions to the column types")
+    val (files, stats, sizes) = writeWithStats(rewritten, prev.colMap, f, root, v,
       partByPhys = prev.partitionBy)
-    val withCdf = cdfEnabled(prev) && changeRows != null
-    val cdf = if (withCdf) writeChangeData(changeRows(slice), map, f, root, v)
+    val withCdf = cdfEnabled(prev)
+    val cdf = if (withCdf) writeChangeData(changeRows(), prev.colMap, f, root, v)
       else Seq.empty
-    if (deltaOk(prev))
-      publishDelta(f, root, v, v - 1, prev.depth + 1, files, touched,
-        schema, map, stats, sizes, prev.maxColId, txn = None,
-        retired = prev.retired, partitionBy = prev.partitionBy, op = op,
-        props = prev.props, cdf = cdf, cdfComplete = withCdf)
-    else
-      publish(f, root, v, untouchedFiles ++ files, schema, map,
-        (prev.stats -- touched) ++ stats, prev.maxColId,
-        txn = None, retired = prev.retired,
-        sizes = (prev.sizes -- touched) ++ sizes, partitionBy = prev.partitionBy,
-        op = op, dvs = prev.dvs -- touched, props = prev.props,
-        cdf = cdf, cdfComplete = withCdf)
+    publishNext(f, root, v, prev)(op, adds = files, removes = touched,
+      stats = stats, sizes = sizes, cdf = cdf, cdfComplete = withCdf)
     v
   }
 
@@ -3524,7 +3411,7 @@ object Snapshots {
     // only by the fold) instead of deleted. Their unreferenced FILES
     // are reclaimed normally — a demoted base is fold fodder, not a
     // readable version. Chain length is bounded by the checkpoint cap,
-    // so at most DeltaChainLimit manifests outlive their vacuum.
+    // so at most that many manifests outlive their vacuum.
     val closure: Set[Long] = {
       val out = scala.collection.mutable.Set[Long]()
       (keepFrom to cur).foreach { v =>

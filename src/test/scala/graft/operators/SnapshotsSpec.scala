@@ -1556,6 +1556,72 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, dir).columns.toSeq === Seq("id", "body"))
   }
 
+  test("every successor op reads the same whether the chain cap makes it a checkpoint or it commits as a delta") {
+    import org.apache.commons.io.FileUtils
+    val shallow = fresh()
+    // base: partitioned, change feed on, a deletion vector present
+    Snapshots.commit(Seq((1L, "a", "p1"), (2L, "a", "p2"), (3L, "b", "p3"),
+      (4L, "b", "p4"), (5L, "c", "p5"), (6L, "c", "p6"))
+      .toDF("id", "grp", "payload").coalesce(1), shallow, partitionBy = Seq("grp")) // v0
+    Snapshots.setChangeFeed(shallow, true) // v1
+    Snapshots.deleteWhere(spark, shallow, col("id") === 6L, deletionVectors = true) // v2
+    val deep = fresh()
+    FileUtils.copyDirectory(new java.io.File(shallow), new java.io.File(deep))
+    // property commits up to the cap: deep's next commit must checkpoint
+    Snapshots.setTableProperty(shallow, "k", Some("v"))
+    while (Snapshots.currentManifest(deep).depth < Snapshots.DeltaChainLimit)
+      Snapshots.setTableProperty(deep, "k", Some("v"))
+    def row(id: Long, grp: String, payload: String) =
+      Seq((id, grp, payload)).toDF("id", "grp", "payload")
+    val ops: Seq[(String, String => Any)] = Seq(
+      "append" -> (d => Snapshots.commitAppend(row(7L, "d", "p7"), d)),
+      "stream-append" -> (d => Snapshots.streamAppendBatch(row(8L, "a", "p8"), 0L, d, "app")),
+      "set-properties" -> (d => Snapshots.setTableProperties(d,
+        Map("x" -> Some("1"), "k" -> None))),
+      "rename" -> (d => Snapshots.renameColumn(d, "payload", "body")),
+      "add-column" -> (d => Snapshots.addColumn(d, "extra",
+        org.apache.spark.sql.types.LongType)),
+      "dv-delete" -> (d => Snapshots.deleteWhere(spark, d, col("id") === 1L,
+        deletionVectors = true)),
+      "partition-delete" -> (d => Snapshots.deleteWhere(spark, d, col("grp") === "b")),
+      "update" -> (d => Snapshots.updateWhere(spark, d, col("id") === 3L,
+        Map("payload" -> lit("upd")))),
+      // keyed on a column that is not the first: the anti-join moves it
+      "merge" -> (d => Snapshots.merge(spark, d,
+        row(20L, "a", "p2").unionByName(row(9L, "c", "p9")), key = "payload")),
+      "merge-into" -> (d => Snapshots.mergeInto(spark, d,
+        row(4L, "b", "!").unionByName(row(10L, "d", "m10")), keys = Seq("id"),
+        updateSet = Some(Map("payload" -> concat(col("t.payload"), col("s.payload")))),
+        insertCols = Some(Map("id" -> col("s.id"), "grp" -> col("s.grp"),
+          "payload" -> col("s.payload"))))))
+    def rows(d: String) =
+      Snapshots.read(spark, d).collect().map(_.toString).sorted.toSeq
+    def state(d: String) = {
+      val v = Snapshots.currentVersion(d)
+      val m = Snapshots.currentManifest(d)
+      (rows(d), Snapshots.read(spark, d).schema, m.schema, m.props,
+        Snapshots.changeFeed(spark, d, v, Some(v)).drop(Snapshots.CommitVersionCol)
+          .collect().map(_.toString).sorted.toSeq)
+    }
+    ops.foreach { case (name, op) =>
+      val (s, c) = (fresh(), fresh())
+      FileUtils.copyDirectory(new java.io.File(shallow), new java.io.File(s))
+      FileUtils.copyDirectory(new java.io.File(deep), new java.io.File(c))
+      op(s)
+      op(c)
+      assert(Snapshots.currentVersion(s) === Snapshots.currentVersion(shallow) + 1,
+        s"$name: the op must commit")
+      assert(Snapshots.currentManifest(s).depth > 0, s"$name: shallow copy commits a delta")
+      assert(Snapshots.currentManifest(c).depth === 0, s"$name: the capped chain checkpoints")
+      assert(state(c) === state(s), s"$name: checkpoint and delta must read the same")
+      // one further delta folds over the checkpoint like over the delta
+      Seq(s, c).foreach(d => Snapshots.commitAppend(
+        Snapshots.read(spark, d).filter(col("id") === 5L), d))
+      assert(Snapshots.currentManifest(c).depth === 1, s"$name: delta on the checkpoint")
+      assert(rows(c) === rows(s), s"$name: a delta on the checkpoint must read the same")
+    }
+  }
+
   test("vacuum demotes still-referenced doomed bases instead of deleting them; survivors stay readable") {
     val dir = fresh()
     Snapshots.commit(df(1, 2).coalesce(1), dir) // v0: full (a delta base)

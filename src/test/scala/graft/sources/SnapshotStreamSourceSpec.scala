@@ -592,6 +592,19 @@ class SnapshotStreamSourceSpec extends SparkSpec {
       s"got: ${e.getCause.getMessage}")
   }
 
+  test("change feed: one micro-batch over an append and the partition drop of its rows delivers the insert, then the delete") {
+    val dir = fresh()
+    val cp = fresh()
+    Snapshots.commit(Seq((1L, "a")).toDF("id", "grp"), dir, partitionBy = Seq("grp")) // v0
+    assert(drainCdfRows2(dir, cp) === Seq((1L, "a", "insert")))
+    Snapshots.commitAppend(Seq((9L, "c")).toDF("id", "grp"), dir) // v1
+    Snapshots.deleteWhere(spark, dir, col("grp") === "c") // v2: drops v1's files
+    // the end manifest no longer lists v1's file: only per-version
+    // attribution over the walked manifests still finds the insert
+    assert(drainCdfRows2(dir, cp) === Seq((9L, "c", "insert"), (9L, "c", "delete")))
+    assert(drainCdfRows2(dir, cp).isEmpty, "exactly once")
+  }
+
   /** drainCdfRows for the (id, grp) shape. */
   private def drainCdfRows2(dir: String, checkpoint: String)
       : Seq[(Long, String, String)] = {
