@@ -8,12 +8,13 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,8 +42,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     first commit onward the stream is at-least-once.
   *
   * Execution model: the server + buffer live on the driver (the same
-  * design as Spark's socket source); each micro-batch ships its slice
-  * to executors inside the `InputPartition`. `commit(end)` truncates
+  * design as Spark's socket source); each micro-batch ships its rows
+  * to executors as contiguous, in-order slices, one per
+  * `InputPartition`, so a large batch parses on up to
+  * `defaultParallelism` cores (see
+  * [[HttpIngestMicroBatchStream.SliceFloorRows]]). `commit(end)` truncates
   * the buffer, bounding driver memory to in-flight batches. This is
   * an ingest-edge source — the Kafka source remains the bulk path;
   * at 100 TB you run many of these behind a load balancer, each
@@ -140,6 +144,8 @@ object HttpIngest {
     def stop(): Unit = server.stop(0)
   }
 
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
   // one server per port per driver JVM; streams attach by port
   private val states = new ConcurrentHashMap[Int, State]()
 
@@ -153,6 +159,16 @@ object HttpIngest {
     * buffering are properties of the ENDPOINT, owned by whoever
     * started it. Synchronized so concurrent starts of the same port
     * can't race into a BindException.
+    *
+    * Acks go out without Nagle's delay: before the first
+    * `HttpServer.create` this sets the JVM-global system property
+    * `sun.net.httpserver.nodelay=true`, unless something already set
+    * it. Without it the server writes a response's headers and body as
+    * two segments, and the body waits for the client's delayed ACK
+    * (about 40 ms per request on keep-alive connections). The JDK reads
+    * the property once, when its server configuration class loads, so
+    * it applies to every `com.sun.net.httpserver` server in this JVM,
+    * and an explicit value (either way) set earlier is left alone.
     */
   def getOrStart(port: Int, validKeys: Set[String] = Set.empty,
                  maxBuffered: Int = 100000): State = synchronized {
@@ -160,6 +176,7 @@ object HttpIngest {
       val existing = states.get(port)
       if (existing != null) return existing
     }
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     val state = new State(server, validKeys, maxBuffered)
     server.createContext("/ingest", (ex: HttpExchange) => handle(state, ex))
@@ -229,32 +246,64 @@ object HttpIngestReaderFactory extends PartitionReaderFactory {
 
 class HttpIngestMicroBatchStream(port: Int, validKeys: Set[String],
                                  maxBuffered: Int = 100000)
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsAdmissionControl {
   private val state = HttpIngest.getOrStart(port, validKeys, maxBuffered)
   // exclusive attachment; true iff no earlier stream of this endpoint
   // incarnation numbered the buffer (fresh-JVM recovery)
   private val firstAttachment = state.attach()
+  // set by the first latestOffset: from then on every offset Spark
+  // hands back was numbered by this stream, not recovered
+  @volatile private var numbered = false
 
   override def initialOffset(): Offset = HttpIngestOffset(0L)
-  override def latestOffset(): Offset = HttpIngestOffset(state.count)
+  override def latestOffset(): Offset = {
+    numbered = true
+    HttpIngestOffset(state.count)
+  }
+  // SupportsAdmissionControl only for its call order: Spark hands this
+  // form the start offset, deserialized, so on every recovery path the
+  // recovered offset reaches deserializeOffset before the first
+  // latestOffset (the plain form is called first when the checkpoint's
+  // last batch was committed). No read limit: a batch takes all rows.
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = latestOffset()
   override def deserializeOffset(json: String): Offset = {
     val n = json.toLong
     // a checkpointed offset from a previous incarnation: rebase so
     // new arrivals number after it and the recovered range can never
-    // swallow them (see State.rebaseTo for the two restart cases)
-    state.rebaseTo(n, firstAttachment)
+    // swallow them (see State.rebaseTo for the two restart cases).
+    // Recovery deserializes before the first latestOffset; later calls
+    // (Spark deserializes each batch's end offset before commit) carry
+    // this stream's own numbering and must not rebase.
+    if (!numbered) state.rebaseTo(n, firstAttachment)
     HttpIngestOffset(n)
   }
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(HttpIngestPartition(state.slice(
+  /** The range as contiguous slices in offset order: one per
+    * [[HttpIngestMicroBatchStream.SliceFloorRows]] rows, at most the
+    * session's `defaultParallelism`, at least one (an empty range
+    * plans one empty partition). */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val rows = state.slice(
       start.asInstanceOf[HttpIngestOffset].n,
-      end.asInstanceOf[HttpIngestOffset].n)))
+      end.asInstanceOf[HttpIngestOffset].n)
+    val n = rows.length
+    val byFloor = n / HttpIngestMicroBatchStream.SliceFloorRows
+    val k = if (byFloor < 2) 1
+      else math.min(byFloor, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](k)(i =>
+      HttpIngestPartition(rows.slice((i.toLong * n / k).toInt, ((i + 1).toLong * n / k).toInt)))
+  }
   override def createReaderFactory(): PartitionReaderFactory = HttpIngestReaderFactory
   override def commit(end: Offset): Unit =
     state.truncate(end.asInstanceOf[HttpIngestOffset].n)
   // release the exclusive attachment; server lifetime stays owned by
   // HttpIngest.stop
   override def stop(): Unit = state.detach()
+}
+
+object HttpIngestMicroBatchStream {
+  /** Rows per slice: a batch splits only into slices of at least this
+    * many rows, so small batches stay one partition and one task. */
+  val SliceFloorRows = 4096
 }
 
 class HttpIngestTable(options: CaseInsensitiveStringMap)

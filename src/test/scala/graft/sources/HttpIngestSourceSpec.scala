@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.net.URI
+import java.io.{BufferedInputStream, InputStream}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
@@ -217,6 +219,146 @@ class HttpIngestSourceSpec extends SparkSpec with BeforeAndAfterAll {
       assert(s.slice(0, 3).map(_.value).toSeq === Seq("""{"c":3}"""),
         "committed prefix is gone; requests below base clamp to what remains")
       assert(s.slice(2, 3).map(_.value).toSeq === Seq("""{"c":3}"""))
+    } finally HttpIngest.stop(s.port)
+  }
+
+  /** The rows of each partition `stream` plans for `[from, until)`. */
+  private def plan(stream: HttpIngestMicroBatchStream, from: Long,
+                   until: Long): Array[Array[HttpIngest.Received]] =
+    stream.planInputPartitions(HttpIngestOffset(from), HttpIngestOffset(until))
+      .map(_.asInstanceOf[HttpIngestPartition].rows)
+
+  test("a first attachment's own end offsets do not rebase the buffer (no re-delivery)") {
+    // Spark deserializes each batch's end offset before commit; on a
+    // fresh endpoint that offset was numbered by this stream, so it
+    // must not be treated as a recovered checkpoint
+    val s = HttpIngest.getOrStart(0, Set.empty)
+    try {
+      (1 to 3).foreach(i => s.append(HttpIngest.Received(s"""{"n":$i}""", "k")))
+      val stream = new HttpIngestMicroBatchStream(s.port, Set.empty)
+      assert(stream.latestOffset() === HttpIngestOffset(3))
+      assert(plan(stream, 0, 3).flatten.map(_.value).toSeq === (1 to 3).map(i => s"""{"n":$i}"""))
+      stream.commit(stream.deserializeOffset("3"))
+      assert(s.count === 3, "the committed batch's own end offset left the numbering alone")
+      val next = stream.latestOffset().asInstanceOf[HttpIngestOffset].n
+      assert(plan(stream, 3, next).flatten.isEmpty, "nothing committed is delivered again")
+      stream.stop()
+    } finally HttpIngest.stop(s.port)
+  }
+
+  test("a fresh endpoint resumed from a committed checkpoint delivers every new row (fewer or more than committed, either trigger)") {
+    // the checkpoint's last batch is committed, so nothing replays and
+    // the resumed stream's first batch asks for the latest offset; the
+    // recovered offset must rebase the fresh buffer before that
+    def resume(committed: Int, fresh: Int, trigger: Trigger): Unit = {
+      val ckpt = Files.createTempDirectory("graft-http-restart").toString
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      def run(p: Int): Unit = {
+        val q = spark.readStream.format("http-ingest").option("port", p.toString).load()
+          .writeStream.option("checkpointLocation", ckpt).trigger(trigger)
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.select("value").collect().foreach(r => got.add(r.getString(0)))
+          }.start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      val before = HttpIngest.getOrStart(0, Set.empty)
+      val p = before.port
+      try {
+        (1 to committed).foreach(i => before.append(HttpIngest.Received(s"""{"old":$i}""", "k")))
+        run(p)
+        assert(got.size === committed)
+        got.clear()
+        // a new endpoint incarnation on the same port: its next stream
+        // is a first attachment, like a fresh driver JVM's
+        HttpIngest.stop(p)
+        val after = HttpIngest.getOrStart(p, Set.empty)
+        (1 to fresh).foreach(i => after.append(HttpIngest.Received(s"""{"new":$i}""", "k")))
+        run(p)
+        assert(got.toArray(Array.empty[String]).toSeq.sorted === (1 to fresh).map(i => s"""{"new":$i}""").sorted,
+          s"$trigger, $committed committed, $fresh fresh: every post-restart row arrives once")
+        assert(after.count === committed + fresh)
+      } finally HttpIngest.stop(p)
+    }
+    for (t <- Seq(Trigger.ProcessingTime(0L), Trigger.AvailableNow())) {
+      resume(committed = 5, fresh = 3, t)
+      resume(committed = 3, fresh = 5, t)
+    }
+  }
+
+  test("50 keep-alive POSTs on one connection are acked well under the Nagle floor") {
+    // each ack used to wait ~40 ms for the client's delayed ACK (about
+    // 2.2 s for 50); the bound leaves room for a slow machine
+    val s = HttpIngest.getOrStart(0, Set.empty)
+    val sock = new Socket("127.0.0.1", s.port)
+    try {
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(5000)
+      val in: InputStream = new BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      val body = """{"a":1}"""
+      val req = (s"POST /ingest HTTP/1.1\r\nHost: 127.0.0.1:${s.port}\r\nX-API-Key: k\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n$body").getBytes(StandardCharsets.US_ASCII)
+      def readLine(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != -1 && c != '\n') { if (c != '\r') sb.append(c.toChar); c = in.read() }
+        sb.toString
+      }
+      def roundTrip(): Int = {
+        out.write(req)
+        out.flush()
+        val status = readLine().split(' ')(1).toInt
+        var len = 0L
+        var h = readLine()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:")) len = h.substring(15).trim.toLong
+          h = readLine()
+        }
+        in.skipNBytes(len)
+        status
+      }
+      val t0 = System.nanoTime()
+      val statuses = Seq.fill(50)(roundTrip())
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(statuses.forall(_ == 202))
+      assert(s.count === 50, "all 50 POSTs went over the one connection and were buffered")
+      assert(ms < 1000, f"50 keep-alive POSTs took $ms%.0f ms")
+    } finally {
+      sock.close()
+      HttpIngest.stop(s.port)
+    }
+  }
+
+  test("a batch plans contiguous in-order slices of at least the floor, at most defaultParallelism") {
+    val floor = HttpIngestMicroBatchStream.SliceFloorRows
+    val dp = spark.sparkContext.defaultParallelism
+    assume(dp >= 2, "splitting needs defaultParallelism >= 2")
+    val k = math.min(3, dp)
+    val total = 2 * dp * floor
+    val s = HttpIngest.getOrStart(0, Set.empty, maxBuffered = total)
+    try {
+      (0 until total).foreach(i => s.append(HttpIngest.Received(s"""{"n":$i}""", "k")))
+      val stream = new HttpIngestMicroBatchStream(s.port, Set.empty)
+
+      // k x floor rows: k slices, in offset order, together the whole range
+      val split = plan(stream, 10, 10 + k * floor)
+      assert(split.length === k)
+      assert(split.forall(_.nonEmpty))
+      assert(split.flatten.toSeq === s.slice(10, 10 + k * floor).toSeq)
+      // twice defaultParallelism floors: capped at defaultParallelism
+      val capped = plan(stream, 0, total)
+      assert(capped.length === dp)
+      assert(capped.flatten.toSeq === s.slice(0, total).toSeq)
+      // below the floor: one partition
+      val small = plan(stream, 0, floor - 1)
+      assert(small.length === 1)
+      assert(small.head.toSeq === s.slice(0, floor - 1).toSeq)
+      // an empty range: one empty partition
+      val empty = plan(stream, 7, 7)
+      assert(empty.length === 1)
+      assert(empty.head.isEmpty)
+      stream.stop()
     } finally HttpIngest.stop(s.port)
   }
 }
