@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 
 import graft.operators.IngestPipeline
@@ -94,24 +98,94 @@ object IngestStream {
   /** One micro-batch of the ingest contract: split the batch into
     * accepted / DLQ, append both as parquet. Any sink failure
     * propagates (→ no offset commit → replay).
+    *
+    * Execution model: the batch's fixed cost is its sink, so the two
+    * writes run at the same time over the cached parse — the accepted
+    * write on the caller's thread, the DLQ write as a second Spark job
+    * on a daemon helper thread. The helper is started from the caller,
+    * so it inherits its local properties: inside a stream that is the
+    * query's job group (`q.stop()` cancels the DLQ job too) and its
+    * batch id. The helper is always joined before `unpersist` — also
+    * when the caller is interrupted, in which case it interrupts the
+    * helper first — and the first failure is thrown only after both
+    * writes have finished, so commit-after-write (D1/D2) and the DLQ
+    * contract (D3) hold as with sequential writes.
+    *
+    * Both writes (and the F7 probe) are planned with adaptive query
+    * execution off: their only exchange is the API-key broadcast, so
+    * AQE has nothing to adapt and only adds a query-stage round per
+    * write (the cached parse and the broadcast as separate jobs, then
+    * a re-optimization). AQE's planner rule reads the SESSION's conf,
+    * not a thread-scoped one, so the switch is set on the batch's
+    * session for the call and restored exactly afterwards. Inside a
+    * stream that session is the query's own clone, used only by this
+    * call; a direct call on a shared session turns AQE off for that
+    * session's other threads while it runs. Every job carries a
+    * `spark.job.description` label ("empty-batch probe", "accepted
+    * write", "DLQ write") after the caller's own description, which
+    * is restored afterwards.
     */
   def processBatch(batch: DataFrame, keys: DataFrame, outDir: String,
                    dlqDir: String, receivedAt: Option[Column]): Unit = {
-    if (!batch.isEmpty) { // F7: empty-batch short-circuit
-      val parsed = IngestPipeline.parse(batch).cache()
-      try {
-        IngestPipeline
-          .enriched(
-            IngestPipeline.admitted(
-              IngestPipeline.validated(parsed, keys)),
-            receivedAt)
-          .write.mode("append").parquet(outDir)
-        // D3: malformed rows land in the DLQ and the batch still
-        // succeeds — poison messages are never re-polled forever.
-        IngestPipeline.rejectedMalformed(parsed)
-          .write.mode("append").parquet(dlqDir)
-      } finally parsed.unpersist()
+    val sc = batch.sparkSession.sparkContext
+    def phase[T](label: String)(body: => T): T = {
+      val own = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(Option(own).fold(label)(d => s"$d\n$label"))
+      try body finally sc.setJobDescription(own)
     }
+    withoutAqe(batch.sparkSession) {
+      if (!phase("empty-batch probe")(batch.isEmpty)) { // F7: empty-batch short-circuit
+        val parsed = IngestPipeline.parse(batch).cache()
+        val failures = new ConcurrentLinkedQueue[Throwable]()
+        def write(label: String)(body: => Unit): Unit =
+          try phase(label)(body) catch { case t: Throwable => failures.add(t) }
+        try {
+          // D3: malformed rows land in the DLQ and the batch still
+          // succeeds — poison messages are never re-polled forever.
+          val dlqWriter = new Thread(() => write("DLQ write") {
+            IngestPipeline.rejectedMalformed(parsed).write.mode("append").parquet(dlqDir)
+          }, DlqWriterThread)
+          dlqWriter.setDaemon(true)
+          dlqWriter.start()
+          write("accepted write") {
+            IngestPipeline
+              .enriched(
+                IngestPipeline.admitted(
+                  IngestPipeline.validated(parsed, keys)),
+                receivedAt)
+              .write.mode("append").parquet(outDir)
+          }
+          joinFully(dlqWriter)
+        } finally parsed.unpersist()
+        Option(failures.poll()).foreach { first =>
+          failures.forEach(first.addSuppressed(_))
+          throw first
+        }
+      }
+    }
+  }
+
+  /** Run `body` with adaptive query execution off in `spark`'s conf,
+    * then restore the setting exactly (set or unset) as it was. */
+  private def withoutAqe[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.asInstanceOf[ClassicSession].sessionState.conf
+    val key = SQLConf.ADAPTIVE_EXECUTION_ENABLED.key
+    val own = if (conf.contains(key)) Some(conf.getConfString(key)) else None
+    conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    try body finally own.fold(conf.unsetConf(key))(conf.setConfString(key, _))
+  }
+
+  /** Name of [[processBatch]]'s DLQ helper thread. */
+  private[streaming] val DlqWriterThread = "graft-ingest-dlq-writer"
+
+  /** Join `t` even when this thread is interrupted (`q.stop()`):
+    * interrupt `t` as well, keep waiting, then restore the flag. */
+  private[streaming] def joinFully(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join()
+      catch { case _: InterruptedException => interrupted = true; t.interrupt() }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** Start the checkpointed streaming query. The trigger mirrors the

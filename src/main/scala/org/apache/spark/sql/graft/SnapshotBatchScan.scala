@@ -629,17 +629,20 @@ class SnapshotFileIndex(spark: ClassicSession, dir: String,
   /** The distinct directories holding the manifest's files — these
     * must be the exact keys of [[leafDirToChildrenFiles]], which is
     * how [[PartitioningAwareFileIndex.allFiles]] enumerates a
-    * non-partitioned index (a bare table root would look up nothing). */
-  override def rootPaths: Seq[Path] =
+    * non-partitioned index (a bare table root would look up nothing).
+    * This and the two maps below are computed once per index:
+    * `allFiles` looks up [[leafDirToChildrenFiles]] once per root path,
+    * so regrouping on every call made planning O(directories × files). */
+  override lazy val rootPaths: Seq[Path] =
     statuses.map(_._2.getPath.getParent).distinct
 
-  override def leafFiles: mutable.LinkedHashMap[Path, FileStatus] = {
+  override lazy val leafFiles: mutable.LinkedHashMap[Path, FileStatus] = {
     val out = mutable.LinkedHashMap[Path, FileStatus]()
     statuses.foreach { case (_, st) => out(st.getPath) = st }
     out
   }
 
-  override def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+  override lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
     statuses.map(_._2).groupBy(_.getPath.getParent)
       .map { case (d, sts) => d -> sts.toArray }
 
@@ -652,7 +655,9 @@ class SnapshotFileIndex(spark: ClassicSession, dir: String,
     * time, so a hardcoded UTC would shift reconstituted timestamp
     * instants in a non-UTC session, and LEGACY mode would silently
     * null malformed values the Scala read path fails loudly on. */
-  override def partitionSpec(): PartitionSpec = {
+  override def partitionSpec(): PartitionSpec = spec
+
+  private lazy val spec: PartitionSpec = {
     if (man.partitionBy.isEmpty) PartitionSpec.emptySpec
     else {
       val tz = spark.sessionState.conf.sessionLocalTimeZone

@@ -1,12 +1,20 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -170,5 +178,152 @@ class IngestStreamSpec extends SparkSpec {
     // the two corrupt payloads retain their raw bytes; the
     // null-props envelope rides the DLQ's null-payload branch
     assert(dlqRaw === Set("""{"k": }""", "garbage not json", null))
+  }
+
+  /** A path that exists as a regular file, so a parquet write to it fails. */
+  private def regularFile(): String =
+    Files.createTempFile("graft-stream", ".blocker").toString
+
+  private def eventIds(dir: String): Set[Long] =
+    spark.read.parquet(dir).select("event_id").as[Long].collect().toSet
+
+  test("a failing write fails the batch only after the other write finished; the restart replays it") {
+    Seq("accepted", "dlq").foreach { failing =>
+      val (ckpt, blocker) = (tmp(), regularFile())
+      val out = if (failing == "accepted") blocker else tmp()
+      val dlq = if (failing == "dlq") blocker else tmp()
+      implicit val sqlCtx = spark.sqlContext
+      val ms = MemoryStream[RawEvent]
+      ms.addData(validRows ++ malformedRows)
+      val q1 = IngestStream.start(ms.toDF(), keysDf, out, dlq, ckpt,
+        Trigger.AvailableNow(), Some(lit(0L)))
+      intercept[Exception] { q1.awaitTermination(60000) }
+      // the write that did not fail ran to completion before the
+      // query failed
+      if (failing == "accepted") assert(eventIds(dlq) === Set(3L, 4L))
+      else assert(eventIds(out) === Set(1L, 2L))
+      // nothing committed: the restart replays the batch into both sinks
+      Files.delete(java.nio.file.Paths.get(blocker))
+      val q2 = IngestStream.start(ms.toDF(), keysDf, out, dlq, ckpt,
+        Trigger.AvailableNow(), Some(lit(0L)))
+      q2.awaitTermination(60000)
+      assert(q2.exception.isEmpty, s"failing $failing")
+      assert(eventIds(out) === Set(1L, 2L), s"failing $failing")
+      assert(eventIds(dlq) === Set(3L, 4L), s"failing $failing")
+    }
+  }
+
+  test("every job processBatch launches in a stream carries the query's job group and a phase label") {
+    val (out, dlq, ckpt) = (tmp(), tmp(), tmp())
+    val labels = Seq("empty-batch probe", "accepted write", "DLQ write")
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
+          if (labels.exists(l => desc.endsWith("\n" + l)))
+            jobs.add(desc -> p.getProperty("spark.jobGroup.id"))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      val ms = MemoryStream[RawEvent]
+      ms.addData(validRows ++ malformedRows)
+      val q = IngestStream.start(ms.toDF(), keysDf, out, dlq, ckpt,
+        Trigger.AvailableNow(), Some(lit(0L)))
+      q.awaitTermination(60000)
+      val runId = q.runId.toString
+      eventually(timeout(Span(20, Seconds))) {
+        val seen = jobs.asScala.toSeq
+        assert(labels.forall(l => seen.exists(_._1.endsWith(l))), seen)
+        assert(seen.forall(_._2 == runId), seen)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("after q.stop() no processBatch helper thread is alive") {
+    val (out, dlq, ckpt) = (tmp(), tmp(), tmp())
+    def helpers() = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == IngestStream.DlqWriterThread && t.isAlive)
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[RawEvent]
+    val q = IngestStream.start(ms.toDF(), keysDf, out, dlq, ckpt,
+      Trigger.ProcessingTime(0L), Some(lit(0L)))
+    try {
+      // keep batches coming until a helper is caught mid-write, then
+      // stop the query under it
+      var caught = false
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      var i = 0L
+      while (!caught && System.nanoTime() < deadline) {
+        ms.addData((validRows ++ malformedRows).map(r => r.copy(event_id = r.event_id + 10 * i)))
+        i += 1
+        val pollUntil = System.nanoTime() + 200L * 1000000L
+        while (!caught && System.nanoTime() < pollUntil) {
+          caught = helpers().nonEmpty
+          if (!caught) Thread.sleep(2L)
+        }
+      }
+      assert(caught, "no DLQ helper thread seen while the stream ran")
+    } finally q.stop()
+    assert(helpers().isEmpty)
+  }
+
+  test("joinFully waits out the helper through an interrupt, interrupts it, and restores the flag") {
+    val helperInterrupted = new AtomicBoolean(false)
+    val helper = new Thread(() => {
+      val end = System.nanoTime() + 300L * 1000000L
+      while (System.nanoTime() < end)
+        try Thread.sleep(5L) catch { case _: InterruptedException => helperInterrupted.set(true) }
+    })
+    helper.start()
+    @volatile var helperAliveAfter = true
+    @volatile var flagAfter = false
+    val caller = new Thread(() => {
+      IngestStream.joinFully(helper)
+      helperAliveAfter = helper.isAlive
+      flagAfter = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    Thread.sleep(50L)
+    caller.interrupt()
+    caller.join(10000L)
+    assert(!helperAliveAfter, "joinFully returned before the helper ended")
+    assert(helperInterrupted.get, "the helper was not interrupted")
+    assert(flagAfter, "the caller's interrupt flag was not restored")
+  }
+
+  test("a direct processBatch call leaves the caller's AQE setting and job description unchanged and plans its writes without AQE") {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "command") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val sc = spark.sparkContext
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set(key, aqe)
+      plans.clear()
+      val (out, dlq) = (tmp(), tmp())
+      sc.setJobDescription("caller's own")
+      IngestStream.processBatch((validRows ++ malformedRows).toDF(), keysDf, out, dlq, Some(lit(0L)))
+      assert(spark.conf.get(key) === aqe)
+      assert(sc.getLocalProperty("spark.job.description") === "caller's own")
+      assert(eventIds(out) === Set(1L, 2L))
+      assert(eventIds(dlq) === Set(3L, 4L))
+      eventually(timeout(Span(20, Seconds))) {
+        val written = plans.asScala.toSeq.filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+        assert(written.size === 2, plans)
+        assert(written.forall(!_.contains("AdaptiveSparkPlan")), written)
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, before)
+      sc.setJobDescription(null)
+    }
   }
 }
